@@ -99,12 +99,12 @@ def main() -> None:
         """ONE JSON line <= 1900 chars (the driver parses only the last
         ~2000 chars of the combined tail). PURE — trims work on local
         copies, so repeated per-phase emission never degrades state.
-        Trim tiers, in order: per-query rounding -> per-query drops
-        (full set lives in the stderr/partial-file record; the driver's
-        CORRECTNESS record re-times the prefix anyway) -> spread/total/
-        absolute rounding -> probe_100x collapse to wall-only -> drop
-        10x-probe rows fastest-large-side-first (probe_pairs and
-        probe_100x — the 100 TB story — are never dropped)."""
+        Trim tiers, in order: keep a stable top-10 subset of the
+        per-query walls -> probe rounding -> drop 10x-probe rows
+        fastest-large-side-first -> probe_100x collapse to wall-only ->
+        per-query pops last (the full set lives in the stderr/partial-
+        file record; probe_pairs, spot_fit and probe_calib are never
+        dropped)."""
         total = round(st["total"], 4)
         probe = {}
         for n, ab in st["probe_abs"].items():
@@ -285,7 +285,6 @@ def main() -> None:
 
     from polars_ds_extension_spark.session import get_spark
     from polars_ds_extension_spark import queries as catalog
-    from polars_ds_extension_spark._utils import release_pins
 
     spark = get_spark(app="pds-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -349,9 +348,9 @@ def main() -> None:
         except Exception as ex:  # pragma: no cover
             print(f"bench error in {name}: {ex}", file=sys.stderr)
             dt = float("nan")
-        # drop cross-query state: stray pinned frames from two-pass plans
-        # would otherwise occupy executor memory for the rest of the run
-        release_pins()
+        # drop cross-query state: frames the query materialized outside
+        # any owned() block would otherwise occupy executor memory for the
+        # rest of the run
         spark.catalog.clearCache()
         return dt
 
@@ -462,7 +461,6 @@ def main() -> None:
             t0 = time.perf_counter()
             qs[name](spark, d).count()
             wall = time.perf_counter() - t0
-            release_pins()
             spark.catalog.clearCache()
             if not (warm and i == 0):
                 samples.append(wall)
@@ -871,7 +869,6 @@ def main() -> None:
                         except Exception as ex:
                             print(f"probe100 metrics skipped for "
                                   f"{name}: {ex}", file=sys.stderr)
-                    release_pins()
                     spark.catalog.clearCache()
                 wall = min(walls)
                 st["probe_100x"][name] = wall
@@ -977,7 +974,6 @@ def main() -> None:
                     st["probe_100x"]["vector_index_search"] = [
                         wall, round(rd / (1 << 20), 1),
                         round(wr / (1 << 20), 1), int(tk)]
-                    release_pins()
                     spark.catalog.clearCache()
                     print(f"probe vector_index_search@100x: "
                           f"{st['probe_100x']['vector_index_search']} "
@@ -1044,7 +1040,6 @@ def main() -> None:
                         rd, _wr, tk = _delta(hi0, snap)
                         st["probe_bytes"].setdefault(name, {})[tag] = [
                             round(rd / (1 << 20), 1), int(tk)]
-                        release_pins()
                         spark.catalog.clearCache()
                     print(f"probe bytes {name}: "
                           f"{st['probe_bytes'][name]}", file=sys.stderr)

@@ -6,6 +6,8 @@ to_expr coercion), re-expressed for pyspark Columns.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
 from typing import Iterable, Sequence
 
 from pyspark.sql import Column
@@ -83,73 +85,67 @@ def spread(df, min_ratio: int = 2):
     return df
 
 
-# ------------------------------------------------------------------ pinning
+# ---------------------------------------------------------- materialization
 
-# Frames persisted by operators whose consumers act AFTER the operator
-# returns (two-pass rank plans, minhash shingle frames, ...), oldest
-# first. A long session would otherwise accumulate cached RDDs forever;
-# we keep a small LRU window (the active query plus a couple of
-# predecessors) and unpersist the rest. Unpersisting a finished query's
-# pin is always safe — Spark recomputes lineage if it is ever re-read.
-_PINNED: list = []
-# 8, not 4 (r15): the composed index-lifecycle queries (build → update
-# → probe in one plan) legitimately hold 5 live pins at once — three
-# minhash bases plus the two bucket artifacts; a window of 4 evicted a
-# pin that was still feeding the final action, silently recomputing
-# the Arrow banding pass it existed to avoid.
-_MAX_PINNED = 8
+# The frame list of the innermost open `owned()` block (None outside
+# any block). A ContextVar, not a module list: each thread and each
+# nested block sees only its own owner, and nothing outlives its block.
+_OWNER: ContextVar["list | None"] = ContextVar("pds_owner", default=None)
 
 
-def pin(df):
-    """persist(MEMORY_AND_DISK) + register for LRU eviction/release."""
+def materialize(df):
+    """persist(MEMORY_AND_DISK) and register the frame with the
+    innermost `owned()` block, which releases it on exit.
+
+    Outside any block this is a plain persist owned by the caller: an
+    operator whose result reads the frame after it returns leaves the
+    release to whoever consumes that result (an enclosing `owned()`,
+    `release`, or a harness's `spark.catalog.clearCache()`)."""
     from pyspark.storagelevel import StorageLevel
 
-    pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PINNED.append(pinned)
-    while len(_PINNED) > _MAX_PINNED:
-        try:
-            _PINNED.pop(0).unpersist(blocking=False)
-        except Exception:  # session already stopped — nothing to release
-            pass
-    return pinned
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    frames = _OWNER.get()
+    if frames is not None:
+        frames.append(out)
+    return out
 
 
-def release_pins() -> None:
-    """Unpersist every registered pin (e.g. at the end of a query batch)."""
-    while _PINNED:
-        try:
-            _PINNED.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-
-
-def unpin(df) -> None:
-    """Unpersist ONE pinned frame and drop it from the registry —
-    for library code that pins internally and cleans up after itself
-    (diagnostics, bounded two-pass plans). release_pins() is a global
-    sweep for harness boundaries; calling it from inside an operator
-    would evict every OTHER live pin in the session too."""
+@contextmanager
+def owned():
+    """Own every frame `materialize`d inside the block: all of them are
+    unpersisted when the block exits, including when it raises. Use it
+    around work that consumes its materialized frames before the block
+    ends; a frame that must outlive the block is materialized outside
+    it. Unpersisting is always safe — Spark recomputes lineage if a
+    released frame is ever read again."""
+    frames: list = []
+    token = _OWNER.set(frames)
     try:
-        df.unpersist(blocking=False)
-    except Exception:
-        pass
-    try:
-        _PINNED.remove(df)
-    except ValueError:
-        pass
+        yield
+    finally:
+        _OWNER.reset(token)
+        for df in reversed(frames):
+            try:
+                df.unpersist(blocking=False)
+            except Exception:  # session already stopped — nothing to free
+                pass
 
 
-def release_checkpoint(df) -> None:
-    """Drop a localCheckpoint's materialized storage NOW.
+def release(df) -> None:
+    """Drop one persisted or locally checkpointed frame's storage NOW.
 
     ``DataFrame.unpersist()`` is a silent no-op on a checkpointed frame
     — it only consults the CacheManager, while localCheckpoint storage
-    lives on the underlying RDD (measured r12: an iterative loop's
-    superseded per-round checkpoints survived df.unpersist and
-    accumulated until a JVM GC let the ContextCleaner reap them). The
-    frame is UNUSABLE afterwards (lineage is truncated, storage gone)
-    — call only on frames that are provably never referenced again."""
+    lives on the RDD under the frame's LogicalRDD (measured: an
+    iterative loop's superseded per-round checkpoints survived
+    df.unpersist and accumulated until a JVM GC let the ContextCleaner
+    reap them), so that RDD is unpersisted too. A released checkpoint
+    is UNUSABLE afterwards (lineage is truncated, storage gone) — call
+    this only on frames that are never read again."""
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # plan shape moved — leave it to the ContextCleaner
+        df.unpersist(blocking=False)
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+    except Exception:  # session stopped or plan shape moved — leave it
+        pass  # to the ContextCleaner

@@ -275,20 +275,19 @@ def logistic_reg(df: DataFrame, features: Sequence[str], target: str,
         cols = cols + [F.lit(1.0)]
     yy = to_col(target).cast("double")
     k = len(cols)
-    # project the needed doubles once and pin them: every IRLS pass then
-    # reads the narrow cached frame instead of replaying the scan (the
-    # same input-caching contract MLlib's iterative optimizers use)
-    from pyspark.storagelevel import StorageLevel
+    # project the needed doubles once and materialize them: every IRLS
+    # pass then reads the narrow cached frame instead of replaying the
+    # scan (the same input-caching contract MLlib's iterative optimizers
+    # use); the fit consumes it, so it is owned by the fit alone
+    from .._utils import materialize, owned, spread
 
-    from .._utils import spread
-
-    df = spread(df.select(
-        *[c.alias(f"__f{i}") for i, c in enumerate(cols)], yy.alias("__y")
-    )).persist(StorageLevel.MEMORY_AND_DISK)
-    cols = [F.col(f"__f{i}") for i in range(k)]
-    yy = F.col("__y")
     beta = np.zeros(k)
-    try:
+    with owned():
+        df = materialize(spread(df.select(
+            *[c.alias(f"__f{i}") for i, c in enumerate(cols)],
+            yy.alias("__y"))))
+        cols = [F.col(f"__f{i}") for i in range(k)]
+        yy = F.col("__y")
         for _ in range(n_iters):
             eta = F.lit(float(beta[-1])) if add_bias else F.lit(0.0)
             for i in range(k - 1 if add_bias else k):
@@ -321,8 +320,6 @@ def logistic_reg(df: DataFrame, features: Sequence[str], target: str,
             beta = beta + step
             if float(np.max(np.abs(step))) < 1e-10:
                 break
-    finally:
-        df.unpersist()
     return beta.tolist()
 
 
@@ -399,17 +396,15 @@ def glm(df: DataFrame, features: Sequence[str], target: str,
         cols = cols + [F.lit(1.0)]
     yy = to_col(target).cast("double")
     k = len(cols)
-    from pyspark.storagelevel import StorageLevel
+    from .._utils import materialize, owned, spread
 
-    from .._utils import spread
-
-    df = spread(df.select(
-        *[c.alias(f"__f{i}") for i, c in enumerate(cols)], yy.alias("__y")
-    )).persist(StorageLevel.MEMORY_AND_DISK)
-    cols = [F.col(f"__f{i}") for i in range(k)]
-    yy = F.col("__y")
     beta = np.zeros(k)
-    try:
+    with owned():  # the IRLS input cache, as in logistic_reg
+        df = materialize(spread(df.select(
+            *[c.alias(f"__f{i}") for i, c in enumerate(cols)],
+            yy.alias("__y"))))
+        cols = [F.col(f"__f{i}") for i in range(k)]
+        yy = F.col("__y")
         for _ in range(n_iters):
             eta = F.lit(0.0)
             for i in range(k):
@@ -444,6 +439,4 @@ def glm(df: DataFrame, features: Sequence[str], target: str,
             beta = beta + step
             if float(np.max(np.abs(step))) < 1e-10:
                 break
-    finally:
-        df.unpersist()
     return beta.tolist()

@@ -25,8 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .._utils import (to_col, group_window, ordered_window, pin,
-                      with_global_totals)
+from .._utils import (to_col, group_window, ordered_window,
+                      materialize, with_global_totals)
 
 
 def _sf2(fn, a: Column, b: Column) -> Column:
@@ -280,7 +280,7 @@ def kaplan_meier(df: DataFrame, time: str, event: str,
     # post-aggregation), both cumulatives run as one ordered window over
     # that small frame; only a genuinely large frame (continuous times at
     # scale) pays the two-pass range-bucket plan's extra collects.
-    at_risk = pin(with_global_totals(at_risk, __tot=F.sum("__c")))
+    at_risk = materialize(with_global_totals(at_risk, __tot=F.sum("__c")))
     if at_risk.count() <= small_threshold:
         ws = Window.orderBy("__t").rangeBetween(Window.unboundedPreceding, 0)
         n_t = F.col("__tot") - F.sum("__c").over(ws) + F.col("__c")

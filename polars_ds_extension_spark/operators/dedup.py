@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
+from .._utils import materialize, owned, release, spread
+
 # 31-bit Mersenne prime modulus for the permutation family: products
 # a·h + b stay < 2^62, so the arithmetic is exact in int64 everywhere
 # (Spark, numpy, any engine).
@@ -145,75 +147,6 @@ def _let(bound: Column, body) -> Column:
     return F.element_at(F.transform(F.array(bound), body), 1)
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 96) -> Column:
-    """MinHash signature: array of n_hashes longs.
-
-    min over shingles of xxhash64(shingle, seed) for each seed — one nested
-    higher-order expression, fully JVM-side, O(n_hashes · |shingles|) per
-    row with zero shuffle. The plan stays constant-size (the seed loop is a
-    runtime sequence, not unrolled Python).
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda i: F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, i))),
-    )
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    sig_col: str,
-    bands: int = 32,
-    rows_per_band: int = 3,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """Candidate near-dup id pairs from banded MinHash signatures.
-
-    ONE shuffle on (band, band_hash). Pairs are generated inside each
-    bucket with a JVM nested-transform over the collected id array —
-    buckets larger than ``max_bucket`` are dropped (at 100 TB a giant
-    bucket means degenerate boilerplate; cap + log, don't explode).
-    Output: (id_a, id_b) with id_a < id_b, distinct.
-    """
-    # sig_col is a materialized column (the signature UDF's output), so
-    # each band slices it directly — no let-binding. (A _let wrapper here
-    # pushed the Generate onto an interpreted non-codegen path: measured
-    # 6× slower on the simhash twin of this explode.)
-    sig = F.col(sig_col)
-    band = F.explode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda j: F.struct(
-                j.alias("band"),
-                F.xxhash64(F.slice(sig, j * rows_per_band + 1,
-                                   rows_per_band)).alias("bh"),
-            ),
-        )
-    )
-    exploded = df.select(F.col(id_col).alias("__id"), band.alias("__b"))
-    buckets = (
-        exploded.groupBy("__b")
-        .agg(F.collect_set("__id").alias("ids"))
-        .where((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-        .select(F.array_sort("ids").alias("ids"))
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + 2,
-                                F.greatest(F.size("ids") - i - 1, F.lit(0))),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    return pairs.select("p.id_a", "p.id_b").distinct()
-
-
 def minhash_band_hashes(hashes: Column, n_hashes: int = 96,
                         bands: int = 32) -> Column:
     """Banded MinHash from per-shingle base hashes → array<long> of band
@@ -286,36 +219,60 @@ def minhash_bands_batch(arrays, n_hashes: int = 96,
 
 def _minhash_base(df: DataFrame, id_col: str, text_col: str,
                   shingle_k: int, n_hashes: int, bands: int) -> DataFrame:
-    """The pinned (__id, __sh, __bands) frame every minhash consumer
-    shares: shingle hashes AND band hashes materialize in ONE pass over
-    the text scan, so the banding stage never re-reads (or re-Arrow-
-    transfers) the multi-hundred-MB shingle cache — measured ~0.9 s off
-    the 100k-doc probe vs banding the pinned frame in a second pass.
+    """The materialized (__id, __th, __sh, __bands) frame every minhash
+    consumer shares: shingle hashes AND band hashes materialize in ONE
+    pass over the text scan, so the banding stage never re-reads (or
+    re-Arrow-transfers) the multi-hundred-MB shingle cache — measured
+    ~0.9 s off the 100k-doc probe vs banding the cached frame in a
+    second pass.
 
-    Pinned (shared LRU registry — evicted by later queries, not
-    session-lifetime): banding and BOTH sides of the verify join would
-    otherwise replay the shingle scan (3 passes → 1), the same
-    materialize-once tradeoff Spark ML's MinHashLSH makes. Shingles are
-    stored as xxhash64 longs (distinct k-grams → distinct longs at
-    ~n²/2⁶⁴ collision odds): 3× smaller pinned frame than 12-char
-    strings and long-array intersects on the verify hot path."""
-    from .._utils import pin, spread
+    Materialized (`_utils.materialize`): banding and BOTH sides of the
+    verify join would otherwise replay the shingle scan (3 passes → 1),
+    the same materialize-once tradeoff Spark ML's MinHashLSH makes. The
+    returned plans read it after the operator returns, so its owner is
+    the caller's enclosing `owned()` block (or, outside one, whoever
+    clears the cache). Shingles are stored as xxhash64 longs (distinct
+    k-grams → distinct longs at ~n²/2⁶⁴ collision odds): 3× smaller
+    cache than 12-char strings and long-array intersects on the verify
+    hot path.
 
-    return pin(spread(df).select(
+    The frame carries its LSH geometry as the in-session attribute
+    ``_pds_lsh_stamp`` ("shingle_k/n_hashes/bands"), checked by every
+    operator that accepts a prebuilt base (`_check_base`)."""
+    base = materialize(spread(df).select(
         F.col(id_col).alias("__id"),
-        # 8-byte text hash rides the pin so identical-text handling
+        # 8-byte text hash rides the cache so identical-text handling
         # (within-pairs, candidate h-filter) never re-scans the corpus
         F.xxhash64(F.col(text_col) if isinstance(text_col, str)
                    else text_col).alias("__th"),
         hashed_char_shingles(text_col, shingle_k).alias("__sh"),
     ).withColumn(
         "__bands", minhash_band_hashes(F.col("__sh"), n_hashes, bands)))
+    base._pds_lsh_stamp = f"{shingle_k}/{n_hashes}/{bands}"
+    return base
+
+
+def _check_base(base: DataFrame, shingle_k: int, n_hashes: int,
+                bands: int) -> DataFrame:
+    """A prebuilt ``_base`` must carry the LSH geometry the caller asks
+    for: band hashes from another geometry never collide with this
+    call's, and the stamp written downstream would describe the wrong
+    artifact — silently recall-0, so it raises instead."""
+    want = f"{shingle_k}/{n_hashes}/{bands}"
+    got = getattr(base, "_pds_lsh_stamp", None)
+    if got != want:
+        raise ValueError(
+            f"_base was built with LSH geometry {got} "
+            f"(shingle_k/n_hashes/bands) but the caller asked for "
+            f"{want}; build it with _minhash_base/_overlap_minhash_bases "
+            f"and the same parameters")
+    return base
 
 
 def _overlap_minhash_bases(frames: "Sequence[tuple[DataFrame, str, str]]",
                            shingle_k: int = 12, n_hashes: int = 96,
                            bands: int = 32) -> "list[DataFrame]":
-    """Build and CONCURRENTLY materialize the pinned minhash bases of
+    """Build and CONCURRENTLY materialize the minhash bases of
     several INDEPENDENT document frames (guide §2.6: overlap
     independent jobs). The index-lifecycle composites (build → update →
     probe in one plan) each need a base per input batch; materializing
@@ -324,19 +281,29 @@ def _overlap_minhash_bases(frames: "Sequence[tuple[DataFrame, str, str]]",
     `build_near_dup_index` / `update_near_dup_index` /
     `near_dup_against_prebuilt` via ``_base=`` (which skips the
     operator's own build + eager count). Each element of ``frames`` is
-    (df, id_col, text_col)."""
+    (df, id_col, text_col). The bases are the caller's; if any build or
+    count fails, every base already built is released before the error
+    propagates."""
     from concurrent.futures import ThreadPoolExecutor
 
-    bases = [_minhash_base(df, i, t, shingle_k, n_hashes, bands)
-             for df, i, t in frames]
-    with ThreadPoolExecutor(max_workers=min(4, len(bases))) as ex:
-        list(ex.map(lambda b: b.count(), bases))
+    bases: list = []
+    try:
+        for df, i, t in frames:
+            bases.append(_minhash_base(df, i, t, shingle_k, n_hashes, bands))
+        with ThreadPoolExecutor(max_workers=min(4, len(bases))) as ex:
+            futures = [ex.submit(b.count) for b in bases]
+        for f in futures:  # the executor has waited for all of them
+            f.result()
+    except BaseException:
+        for b in bases:
+            release(b)
+        raise
     return bases
 
 
 def _lsh_buckets(base: DataFrame, max_bucket: int) -> DataFrame:
     """(band, band_hash) buckets of 2..max_bucket members from the
-    pinned minhash base — ONE shuffle on the bucket key; the size guard
+    materialized minhash base — ONE shuffle on the bucket key; the size guard
     applies in the same aggregation (no separate count + semi-join).
     collect_list + one array_distinct per bucket, not collect_set: a
     doc emits exactly ONE row per band (posexplode of its per-doc band
@@ -490,32 +457,32 @@ def lsh_candidate_stats(
     on an UNcollapsed corpus with exact-dup rate in (0, 10%] its
     verify-join volume is slightly below the cand_distinct reported
     here."""
-    from .._utils import unpin
 
     n_rows = None
     if collapse == "auto":
         collapse, n_rows = _dup_rate_gate(df, text_col)
     mined = _rep_corpus(df, id_col, text_col) if collapse else df
-    base = _minhash_base(mined, id_col, text_col,
-                         shingle_k, n_hashes, bands)
-    sizes = (base.select("__id", F.posexplode("__bands").alias("band", "bh"))
-             .groupBy("band", "bh").agg(F.count(F.lit(1)).alias("n"))
-             .where(F.col("n") >= 2))
-    agg = sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("n").alias("max_bucket_size"),
-        F.sum(F.when(F.col("n") > max_bucket, 1).otherwise(0))
-        .alias("dropped_buckets"),
-        F.sum(F.when(F.col("n") <= max_bucket,
-                     F.col("n") * (F.col("n") - 1) / 2).otherwise(0))
-        .alias("cand_slots"),
-    ).collect()[0]
-    n_mined = base.count()
-    cand_distinct = _bucket_pairs(
-        _lsh_buckets(base, max_bucket)).distinct().count()
-    unpin(base)  # only OUR pin — a global release_pins() here would
-    # evict every other live pin in the session (diagnostics must not
-    # have side effects on unrelated plans)
+    # the stats consume the base before returning: it is owned (and
+    # released) here, with no effect on any other live cache
+    with owned():
+        base = _minhash_base(mined, id_col, text_col,
+                             shingle_k, n_hashes, bands)
+        sizes = (base.select("__id",
+                             F.posexplode("__bands").alias("band", "bh"))
+                 .groupBy("band", "bh").agg(F.count(F.lit(1)).alias("n"))
+                 .where(F.col("n") >= 2))
+        agg = sizes.agg(
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.max("n").alias("max_bucket_size"),
+            F.sum(F.when(F.col("n") > max_bucket, 1).otherwise(0))
+            .alias("dropped_buckets"),
+            F.sum(F.when(F.col("n") <= max_bucket,
+                         F.col("n") * (F.col("n") - 1) / 2).otherwise(0))
+            .alias("cand_slots"),
+        ).collect()[0]
+        n_mined = base.count()
+        cand_distinct = _bucket_pairs(
+            _lsh_buckets(base, max_bucket)).distinct().count()
     if not collapse:
         n_rows = int(n_mined)  # mined the full corpus — no extra count
     elif n_rows is None:
@@ -543,7 +510,7 @@ _VERIFY_PRUNE_CAP = 4_000_000
 #: estimated corpus-projection bytes (Catalyst plan statistics — a
 #: free driver-side file-size estimate, no job) above which the verify
 #: kernel switches from the lazy single-action plan to the eager
-#: pin-materialize + prune regime. Calibrated against the probe
+#: materialize + prune regime. Calibrated against the probe
 #: decades: sf0.1 ≈ 0.45 MB, 10× ≈ 4.5 MB (both comfortably
 #: broadcast-regime — the lazy plan is faster there: AQE's redundant
 #: concurrent leaf computes are free on idle cores, while an eager
@@ -576,16 +543,17 @@ _VERIFY_SHJ_CAP = int(os.environ.get("SPARK_GRAFT_VERIFY_SHJ_CAP",
 def _verify_pairs(base: DataFrame, cand: DataFrame, threshold: float,
                   prune: "bool | str" = "auto") -> DataFrame:
     """Exact-Jaccard verification of candidate id pairs against the
-    pinned shingle sets — the kernel both `near_dup_pairs` branches
-    share. Output: (id_a, id_b, jaccard) with jaccard ≥ threshold.
+    materialized shingle sets — the kernel both `near_dup_pairs`
+    branches share. Output: (id_a, id_b, jaccard) with jaccard ≥ threshold.
 
     Scale regime (``prune="auto"``: engaged when the corpus
     projection's Catalyst size estimate exceeds `_VERIFY_EAGER_MIN_MB`
     — the sort-merge decades; overridable for tests): the candidate
-    frame is pinned and counted EAGERLY before the verify plan runs,
+    frame is materialized and counted EAGERLY before the verify plan
+    runs,
     for two measured reasons (r12, 1M-doc spot):
 
-    * the count materializes the lazily-pinned minhash ``base`` as a
+    * the count fills the lazily-persisted minhash ``base`` as a
       side effect (the banding pipeline is cand's prefix) — without
       it, AQE launches the plan's ~6 independent leaf query-stages
       concurrently and EACH recomputes the full shingle+banding pass
@@ -605,10 +573,10 @@ def _verify_pairs(base: DataFrame, cand: DataFrame, threshold: float,
       under 1 and this is where the term pays.
 
     At engaged scale the verify joins price their OWN exchanges and
-    the base pin moves to DISK_ONLY (r14 — see the inline comments):
+    the base cache moves to DISK_ONLY (r14 — see the inline comments):
     the two measured killers at the 1M-doc spot were per-task sorts of
     ~600 MB of array rows (session partition count) and the in-memory
-    pin halving every task's execution grant.
+    cache halving every task's execution grant.
 
     Below the size threshold the r11 lazy single-action plan runs
     unchanged — at broadcast scale the eager count measured as a pure
@@ -620,9 +588,7 @@ def _verify_pairs(base: DataFrame, cand: DataFrame, threshold: float,
     engage = (_plan_size_mb(base) > _VERIFY_EAGER_MIN_MB
               if prune == "auto" else bool(prune))
     if engage:
-        from .._utils import pin
-
-        # materialize the base pin FIRST: cand's own plan reads it
+        # materialize the base cache FIRST: cand's own plan reads it
         # from up to 3 leaf legs (band explode + both sides of the
         # identical-text filter), and against a cold cache AQE runs
         # them concurrently — each recomputing the full shingle+band
@@ -643,7 +609,7 @@ def _verify_pairs(base: DataFrame, cand: DataFrame, threshold: float,
         base.unpersist(blocking=False)
         base.persist(StorageLevel.DISK_ONLY)
         base.count()
-        cand = pin(cand)
+        cand = materialize(cand)
         n_pairs = cand.count()
         if n_pairs <= _VERIFY_PRUNE_CAP:
             ids = (cand.select(
@@ -682,7 +648,7 @@ def _verify_pairs(base: DataFrame, cand: DataFrame, threshold: float,
         # sorts stay in memory, measured spill 20 GB -> 0). A
         # posting-list reformulation (skinny exploded rows, no arrays
         # joined) was measured strictly worse here: 500M-row exchanges
-        # starved the unified pool beside the pinned base and died in
+        # starved the unified pool beside the cached base and died in
         # UNABLE_TO_ACQUIRE_MEMORY where the fat path merely spilled.
         n_fat = int(min(4096, max(32, _plan_size_mb(sh) * 2 // 16)))
         sh = sh.repartition(n_fat, "__id")
@@ -737,7 +703,7 @@ def near_dup_pairs(
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs, exact-Jaccard verified.
 
-    Pipeline: shingle hashes + band hashes in ONE pinned pass
+    Pipeline: shingle hashes + band hashes in ONE materialized pass
     (`_minhash_base`: JVM k-gram hashing feeding the vectorized numpy
     banding UDF) → banded LSH (one shuffle) → candidate pairs → join
     back for shingle sets → exact Jaccard filter. The hash functions
@@ -786,8 +752,8 @@ def near_dup_pairs(
     if not collapse:
         base = _minhash_base(df, id_col, text_col,
                              shingle_k, n_hashes, bands)
-        # id→text-hash map and within-pairs read the PIN (the __th
-        # column rides it) — zero extra corpus scans on this branch
+        # id→text-hash map and within-pairs read the BASE cache (the
+        # __th column rides it) — zero extra corpus scans on this branch
         keyed = base.select(F.col("__id").alias("__m"),
                             F.col("__th").alias("__h"))
         within = _exact_within_pairs(keyed)
@@ -811,17 +777,17 @@ def near_dup_pairs(
     # members is ONE distinct (id, hash) frame shared by the
     # within-pairs and the expansion joins (one corpus scan, not two;
     # _exact_within_pairs array_distincts per group anyway, so feeding
-    # it pre-distincted rows is value-identical).
-    from .._utils import pin
+    # it pre-distincted rows is value-identical). Both frames are read
+    # by the returned plan, so the caller owns them.
 
     keyed_t = df.select(F.col(id_col).alias("__m"),
                         F.col(text_col).alias("__t"),
                         F.xxhash64(F.col(text_col)).alias("__h"))
-    rep = pin(keyed_t.groupBy("__h").agg(
+    rep = materialize(keyed_t.groupBy("__h").agg(
         F.min(F.struct("__m", "__t")).alias("__r")))
     reps_df = rep.select(F.col("__r.__m").alias(id_col),
                          F.col("__r.__t").alias(text_col))
-    members = pin(df.select(F.col(id_col).alias("__m"),
+    members = materialize(df.select(F.col(id_col).alias("__m"),
                             F.xxhash64(F.col(text_col)).alias("__h"))
                   .distinct())
     within = _exact_within_pairs(members)
@@ -869,7 +835,7 @@ def near_dup_against_index(
     itself every day).
 
     Plan (asymmetric by design — the index is the 100 TB side):
-      * both frames get the one-pass pinned shingle+band base
+      * both frames get the one-pass materialized shingle+band base
         (`_minhash_base`); the index side then moves ONLY its band
         hashes — (bands per doc) 8-byte rows — through ONE aggregation
         on the bucket key, never its text or shingle sets;
@@ -891,14 +857,14 @@ def near_dup_against_index(
     """
     nb = _minhash_base(new, id_col, text_col, shingle_k, n_hashes, bands)
     ib = _minhash_base(index, id_col, text_col, shingle_k, n_hashes, bands)
-    # materialize both pins EAGERLY: the two-frame plan reads each pin
-    # from two subtrees of one action (bucket path + verify path), and
-    # a lazily-persisted pin computes its Arrow banding UDF once per
-    # unmaterialized read in that first job (measured 10.6 → 6.2 s at
-    # the 10× probe). One count per pin is two cheap scans by contrast.
+    # fill both base caches EAGERLY: the two-frame plan reads each
+    # base from two subtrees of one action (bucket path + verify path),
+    # and a lazily-persisted base computes its Arrow banding UDF once
+    # per unfilled read in that first job (measured 10.6 → 6.2 s at
+    # the 10× probe). One count per base is two cheap scans by contrast.
     # (near_dup_pairs deliberately stays lazy — its single-frame action
-    # shares the pin fine, and the extra pass measured net-negative.)
-    # r15 (guide §2.6): the two pin materializations are independent
+    # shares the cache fine, and the extra pass measured net-negative.)
+    # r15 (guide §2.6): the two cache fills are independent
     # jobs — overlap them so the small batch's scan back-fills the
     # index scan's tail instead of waiting behind it.
     from concurrent.futures import ThreadPoolExecutor
@@ -954,7 +920,7 @@ def _member_buckets(mem: DataFrame, max_bucket: int,
 def _index_buckets(ib: DataFrame, max_bucket: int,
                    tombstones: bool = False) -> DataFrame:
     """(band, bh, ids) buckets of a minhash-base index frame (the __th
-    column rides the pin — zero extra shuffle; see _member_buckets for
+    column rides the base cache — zero extra shuffle; see _member_buckets for
     the dedup/cap/tombstone contract)."""
     return _member_buckets(
         ib.select("__id", "__th",
@@ -967,7 +933,7 @@ def _probe_index(nb: DataFrame, buckets: DataFrame, shingles: DataFrame,
     """Probe a new-batch minhash base against (buckets, shingles) index
     frames: band join → candidate ids → exact-Jaccard verify →
     per-new-doc best match. Shared by `near_dup_against_index` (frames
-    derived from the live pin) and `near_dup_against_prebuilt` (frames
+    derived from the live base) and `near_dup_against_prebuilt` (frames
     loaded from a persisted artifact) so the two paths cannot diverge."""
     new_ex = nb.select(
         F.col("__id").alias("__nid"),
@@ -1033,11 +999,11 @@ def build_near_dup_index(
     # the composed lifecycle queries overlap the three independent
     # banding scans instead of serializing them (r16, guide §2.6)
     if _base is not None:
-        ib = _base
+        ib = _check_base(_base, shingle_k, n_hashes, bands)
     else:
         ib = _minhash_base(docs, id_col, text_col, shingle_k, n_hashes,
                            bands)
-        # both outputs read the pin (bucket agg + shingle projection);
+        # both outputs read the base (bucket agg + shingle projection);
         # eager materialization keeps the Arrow banding pass at one run
         ib.count()
     # the LSH parameters ride the bucket rows as one dictionary-encoded
@@ -1046,7 +1012,8 @@ def build_near_dup_index(
     # indistinguishable from a clean batch)
     buckets = _index_buckets(ib, max_bucket, tombstones=True).withColumn(
         "_lsh", F.lit(f"{shingle_k}/{n_hashes}/{bands}/{max_bucket}"))
-    # r15: pin the bucket artifact. Production persists this frame to
+    # r15: materialize the bucket artifact (owned by the caller, like
+    # the base). Production persists this frame to
     # parquet and every consumer reads the file; composed in-session
     # use (update/probe on the live frame) instead re-ran the bucket
     # aggregation once per consumer subtree — the stamp check, the
@@ -1054,8 +1021,7 @@ def build_near_dup_index(
     # (measured: index_update 9.7 s, dominated by repeated bucket
     # aggs). The frame is skinny (8-byte keys + id arrays, no text)
     # and disk-spillable.
-    from .._utils import pin
-    buckets = pin(buckets)
+    buckets = materialize(buckets)
     # in-session provenance: the stamp is a single literal ON THIS
     # FRAME OBJECT by construction, so a same-session consumer can
     # skip the stamp-uniqueness scan (a full job on a live frame);
@@ -1096,7 +1062,7 @@ def near_dup_against_prebuilt(
     """
     buckets = _check_lsh_stamp(buckets, shingle_k, n_hashes, bands)
     if _base is not None:  # pre-materialized (see _overlap_minhash_bases)
-        nb = _base
+        nb = _check_base(_base, shingle_k, n_hashes, bands)
     else:
         nb = _minhash_base(new, id_col, text_col, shingle_k, n_hashes,
                            bands)
@@ -1226,11 +1192,11 @@ def update_near_dup_index(
             "updatable artifact format; rebuild it with "
             "build_near_dup_index before updating")
     if _base is not None:  # pre-materialized (see _overlap_minhash_bases)
-        nb = _base
+        nb = _check_base(_base, shingle_k, n_hashes, bands)
     else:
         nb = _minhash_base(new, id_col, text_col, shingle_k, n_hashes,
                            bands)
-        # eager pin: the plan reads it from the bucket-merge and
+        # eager fill: the plan reads it from the bucket-merge and
         # shingle-append subtrees (same rationale as
         # near_dup_against_index)
         nb.count()
@@ -1253,11 +1219,10 @@ def update_near_dup_index(
             "band", "bh", F.lit(None).cast(ids_t).alias("ids")))
         .withColumn("_lsh",
                     F.lit(f"{shingle_k}/{n_hashes}/{bands}/{max_bucket}")))
-    # r15: pin the updated artifact — same rationale as
+    # r15: materialize the updated artifact — same rationale as
     # build_near_dup_index (a downstream probe's stamp check + band
     # join would otherwise each replay the merge aggregation).
-    from .._utils import pin
-    out_buckets = pin(out_buckets)
+    out_buckets = materialize(out_buckets)
     # in-session provenance (see build_near_dup_index)
     out_buckets._pds_lsh_stamp = \
         f"{shingle_k}/{n_hashes}/{bands}/{max_bucket}"
@@ -1342,7 +1307,6 @@ def simhash_near_dup_pairs(
     volume stays tiny; verification compares two longs.
     Output: (id_a, id_b, hamming).
     """
-    from .._utils import spread
 
     n_tables, width = 4, 16
     base = spread(df).select(
@@ -1426,8 +1390,6 @@ def blocked_jaccard_pairs(
 
 # ----------------------------------------------- components / canonical dedup
 
-from .._utils import release_checkpoint as _release_checkpoint
-
 
 def connected_components(
     pairs: DataFrame,
@@ -1483,7 +1445,7 @@ def connected_components(
     broadcasts, and the per-round partitioning stays cluster-sized.
     """
     from pyspark.sql import Observation
-    from pyspark.storagelevel import StorageLevel
+
 
     e = (pairs.select(F.col(id_a).cast("long").alias("s"),
                       F.col(id_b).cast("long").alias("d"))
@@ -1494,29 +1456,31 @@ def connected_components(
          # tier's union-find would crash comparing None — one filter
          # makes the tiers trivially consistent (r12 review)
          .where(F.col("s").isNotNull() & F.col("d").isNotNull()))
-    # cache the DIRECTED edge list and materialize it BEFORE the
-    # symmetrizing union references it twice: the union's two legs
-    # otherwise EACH recompute the entire upstream pair pipeline when
-    # the edges cache first materializes (AQE launches both leg stages
-    # concurrently against a cold cache, and exchange reuse does not
-    # dedupe them) — at the 1M-doc spot that doubled the whole
-    # minhash verify: 4 shingle-frame exchanges and 2 pair-carry
-    # joins, ~8 GB of the 16.8 GB total (r12). The e cache is 16-byte
-    # rows — |pairs|-bounded, trivial next to what it saves — and is
-    # dropped as soon as the symmetrized cache is materialized.
-    from pyspark.storagelevel import StorageLevel as _SL
-
-    e_cached = e.persist(_SL.MEMORY_AND_DISK)
-    try:
-        n_directed = e_cached.count()
-        e = e_cached
+    # every cache below is consumed before this returns (the result is
+    # a checkpoint or a driver-built frame), so the block owns them all
+    # and releases them on EVERY exit — a raise between the first
+    # materialize and the loop (driver-tier collect OOM, edge
+    # materialization failure) included.
+    with owned():
+        # cache the DIRECTED edge list and materialize it BEFORE the
+        # symmetrizing union references it twice: the union's two legs
+        # otherwise EACH recompute the entire upstream pair pipeline
+        # when the edges cache first materializes (AQE launches both leg
+        # stages concurrently against a cold cache, and exchange reuse
+        # does not dedupe them) — at the 1M-doc spot that doubled the
+        # whole minhash verify: 4 shingle-frame exchanges and 2
+        # pair-carry joins, ~8 GB of the 16.8 GB total (r12). The e
+        # cache is 16-byte rows — |pairs|-bounded, trivial next to what
+        # it saves — and is released as soon as the symmetrized cache is
+        # materialized.
+        e = materialize(e)
+        n_directed = e.count()
         if (small_graph == "driver"
                 or (small_graph == "auto" and n_directed <= 100_000)):
             # driver tier (see docstring): one union-find pass over the
-            # collected edge list, deterministic (sorted by id; comp = min
-            # reachable id — the loop's exact contract)
-            rows = e_cached.collect()
-            e_cached.unpersist(blocking=False)
+            # collected edge list, deterministic (sorted by id; comp =
+            # min reachable id — the loop's exact contract)
+            rows = e.collect()
             parent: dict = {}
 
             def _find(x):
@@ -1535,135 +1499,112 @@ def connected_components(
             labels = sorted((int(n), int(_find(n))) for n in nodes)
             return pairs.sparkSession.createDataFrame(
                 labels, "id long, comp long")
-        # persistence is managed LOCALLY (not the shared LRU pin registry —
-        # the loop's own caches would evict the edges cache mid-iteration and
-        # replay the whole upstream pair pipeline). Each round's label frame
-        # is localCheckpoint(eager)ed: iterative self-joins otherwise DOUBLE
-        # the logical plan every round (plan(lab_n) ⊃ 2·plan(lab_{n-1})) —
-        # exponential analysis cost and a stack overflow by ~10 rounds. The
-        # checkpoint truncates lineage to the materialized partitions, the
-        # same pattern GraphX/MLlib iterative jobs use.
+        # Each round's label frame is localCheckpoint(eager)ed: iterative
+        # self-joins otherwise DOUBLE the logical plan every round
+        # (plan(lab_n) ⊃ 2·plan(lab_{n-1})) — exponential analysis cost
+        # and a stack overflow by ~10 rounds. The checkpoint truncates
+        # lineage to the materialized partitions, the same pattern
+        # GraphX/MLlib iterative jobs use.
         #
-        # ``assume_unique``: the dedup pair producers emit each undirected
-        # pair exactly once with id_a < id_b, so the symmetrized union is
-        # duplicate-free BY CONSTRUCTION and the distinct() — a full extra
-        # shuffle of the edge set — is skipped. Duplicate edges would only
-        # repeat min() work, never change the answer, but the default keeps
-        # the shuffle for arbitrary caller input.
+        # ``assume_unique``: the dedup pair producers emit each
+        # undirected pair exactly once with id_a < id_b, so the
+        # symmetrized union is duplicate-free BY CONSTRUCTION and the
+        # distinct() — a full extra shuffle of the edge set — is
+        # skipped. Duplicate edges would only repeat min() work, never
+        # change the answer, but the default keeps the shuffle for
+        # arbitrary caller input.
         edges = e.unionByName(e.select(F.col("d").alias("s"),
                                        F.col("s").alias("d")))
         if not assume_unique:
             edges = edges.distinct()
-        # keep the handle to the frame that is actually CACHED: the
-        # small-graph coalesce below rebinds `edges`, and unpersisting the
-        # coalesced (never-cached) plan would silently leak the cache —
-        # uncache matches the exact cached plan only (r11 review finding)
-        edges_cached = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        edges = edges_cached
-        try:
-            # adaptive small-graph gate (see docstring): ≤1M edges → ≤2M
-            # label rows ≈ tens of MB — safely broadcastable, and the
-            # coalesce caps each round at a handful of tasks.
-            # ``small_graph`` overrides the measured gate (r11 verdict #3:
-            # an adaptive branch nothing can force is an untestable branch
-            # — the parity pytest and the forced-shuffle probe both pin the
-            # 100 TB path against the broadcast path on one graph). Both
-            # branches share the identical round recurrence; they differ
-            # only in broadcast hint + partition shaping, so the override
-            # is value-neutral by construction AND by test.
-            n_edges = edges.count()
-            # the symmetrized cache is materialized now — the directed
-            # staging cache has served its purpose
-            e_cached.unpersist(blocking=False)
-            small = (n_edges <= 1_000_000 if small_graph == "auto"
-                     else bool(small_graph))
-            p = int(n_edges // 500_000 + 1)
-            if small:
-                edges = edges.coalesce(p)
+        edges = materialize(edges)
+        # adaptive small-graph gate (see docstring): ≤1M edges → ≤2M
+        # label rows ≈ tens of MB — safely broadcastable, and the
+        # coalesce caps each round at a handful of tasks.
+        # ``small_graph`` overrides the measured gate (r11 verdict #3:
+        # an adaptive branch nothing can force is an untestable branch
+        # — the parity pytest and the forced-shuffle probe both pin the
+        # 100 TB path against the broadcast path on one graph). Both
+        # branches share the identical round recurrence; they differ
+        # only in broadcast hint + partition shaping, so the override
+        # is value-neutral by construction AND by test.
+        n_edges = edges.count()
+        # the symmetrized cache is materialized now — the directed
+        # staging cache has served its purpose
+        release(e)
+        small = (n_edges <= 1_000_000 if small_graph == "auto"
+                 else bool(small_graph))
+        p = int(n_edges // 500_000 + 1)
+        if small:
+            edges = edges.coalesce(p)
 
-            def _shape(lab):
-                return lab.coalesce(p) if small else lab
+        def _shape(lab):
+            return lab.coalesce(p) if small else lab
 
-            def _probe(lab):
-                return F.broadcast(lab) if small else lab
+        def _probe(lab):
+            return F.broadcast(lab) if small else lab
 
-            # round-0 shortcut: start from min(id, min neighbor) — the same
-            # single groupBy a comp=id init would cost, but it bakes the
-            # first propagation in, saving one full join round (diameter-2
-            # dup clusters then converge in a single propagation).
-            # Labels only DECREASE, so sum(comp) strictly drops on any
-            # change — and the sum rides each round's CHECKPOINT job as an
-            # observe() metric, so the fixpoint check costs zero extra jobs.
-            obs0 = Observation()
-            lab = _shape(
-                edges.groupBy(F.col("s").alias("id"))
-                .agg(F.least(F.first("s"), F.min("d")).alias("comp"))
-                .observe(obs0, F.sum("comp").alias("s"))
+        # round-0 shortcut: start from min(id, min neighbor) — the same
+        # single groupBy a comp=id init would cost, but it bakes the
+        # first propagation in, saving one full join round (diameter-2
+        # dup clusters then converge in a single propagation).
+        # Labels only DECREASE, so sum(comp) strictly drops on any
+        # change — and the sum rides each round's CHECKPOINT job as an
+        # observe() metric, so the fixpoint check costs zero extra jobs.
+        obs0 = Observation()
+        lab = _shape(
+            edges.groupBy(F.col("s").alias("id"))
+            .agg(F.least(F.first("s"), F.min("d")).alias("comp"))
+            .observe(obs0, F.sum("comp").alias("s"))
+        ).localCheckpoint(eager=True)
+        prev_sum = obs0.get["s"]
+        for _ in range(max_iters):
+            nb = (
+                edges.join(_probe(lab.withColumnRenamed("id", "d")
+                                     .withColumnRenamed("comp", "__nc")),
+                           "d")
+                .select(F.col("s").alias("id"), F.col("__nc").alias("comp"))
+            )
+            # pointer jump: every node probes its LABEL's label (labels
+            # are node ids and every node id is in lab, so the inner
+            # join is total) — path doubling makes deep components
+            # converge in O(log diameter) rounds; the |V|-row self-join
+            # is cheap next to the edge join it saves rounds of
+            jump = (
+                lab.select("id", F.col("comp").alias("__via"))
+                .join(_probe(lab.select(F.col("id").alias("__via"),
+                                        F.col("comp").alias("comp"))),
+                      "__via")
+                .select("id", "comp")
+            )
+            obs = Observation()
+            new = _shape(
+                lab.unionByName(nb).unionByName(jump)
+                .groupBy("id").agg(F.min("comp").alias("comp"))
+                .observe(obs, F.sum("comp").alias("s"))
             ).localCheckpoint(eager=True)
-            prev_sum = obs0.get["s"]
-            converged = False
-            for _ in range(max_iters):
-                nb = (
-                    edges.join(_probe(lab.withColumnRenamed("id", "d")
-                                         .withColumnRenamed("comp", "__nc")),
-                               "d")
-                    .select(F.col("s").alias("id"), F.col("__nc").alias("comp"))
-                )
-                # pointer jump: every node probes its LABEL's label (labels
-                # are node ids and every node id is in lab, so the inner
-                # join is total) — path doubling makes deep components
-                # converge in O(log diameter) rounds; the |V|-row self-join
-                # is cheap next to the edge join it saves rounds of
-                jump = (
-                    lab.select("id", F.col("comp").alias("__via"))
-                    .join(_probe(lab.select(F.col("id").alias("__via"),
-                                            F.col("comp").alias("comp"))),
-                          "__via")
-                    .select("id", "comp")
-                )
-                obs = Observation()
-                new = _shape(
-                    lab.unionByName(nb).unionByName(jump)
-                    .groupBy("id").agg(F.min("comp").alias("comp"))
-                    .observe(obs, F.sum("comp").alias("s"))
-                ).localCheckpoint(eager=True)
-                new_sum = obs.get["s"]
-                # the superseded round's checkpointed partitions would stay
-                # materialized until a JVM GC otherwise — O(rounds)
-                # executor storage held by a loop that only needs 2 frames.
-                # NB DataFrame.unpersist() is a NO-OP here (it consults
-                # only the CacheManager; localCheckpoint storage lives on
-                # the RDD) — release the checkpointed RDD itself. Safe
-                # ONLY because `new` is already eagerly materialized and
-                # `lab` is never referenced again (a released checkpoint
-                # cannot be recomputed — lineage is truncated).
-                _release_checkpoint(lab)
-                lab = new
-                if new_sum == prev_sum:
-                    converged = True
-                    break
-                prev_sum = new_sum
-            if not converged:
-                # wrong labels must never come back quietly (r12: the
-                # pre-jump loop did exactly that on a >max_iters-diameter
-                # chain — every consumer would have deduped against
-                # half-propagated components)
-                _release_checkpoint(lab)  # never returned — don't strand it
-                raise RuntimeError(
-                    f"connected_components did not converge in {max_iters} "
-                    "rounds — with pointer jumping this needs a component "
-                    f"diameter over ~2^{max_iters}; raise max_iters or "
-                    "inspect the edge input")
-            return lab
-        finally:
-            edges_cached.unpersist(blocking=False)
-    finally:
-        # covers EVERY exit (the r12 review: a raise between the
-        # persist and the loop — driver-tier collect OOM, edge
-        # materialization failure — leaked the |pairs|-sized cache
-        # for the session). Re-unpersisting an already-released
-        # frame is a no-op, so the early success-path releases stay.
-        e_cached.unpersist(blocking=False)
+            new_sum = obs.get["s"]
+            # the superseded round's checkpointed partitions would stay
+            # materialized until a JVM GC otherwise — O(rounds) executor
+            # storage held by a loop that only needs 2 frames. Safe ONLY
+            # because `new` is already eagerly materialized and `lab` is
+            # never referenced again (a released checkpoint cannot be
+            # recomputed — lineage is truncated).
+            release(lab)
+            lab = new
+            if new_sum == prev_sum:
+                return lab
+            prev_sum = new_sum
+        # wrong labels must never come back quietly (r12: the pre-jump
+        # loop did exactly that on a >max_iters-diameter chain — every
+        # consumer would have deduped against half-propagated
+        # components)
+        release(lab)  # never returned — don't strand it
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iters} "
+            "rounds — with pointer jumping this needs a component "
+            f"diameter over ~2^{max_iters}; raise max_iters or "
+            "inspect the edge input")
 
 
 def canonical_dedup(
@@ -1741,10 +1682,11 @@ def near_dup_canonical_dedup(
     full-text pass (r10 regression: 4.1 → 5.4 s at sf0.1 was mostly
     this query paying three extra text scans — the gate's plus the
     unpinned keyed8 frame's two join sides)."""
-    return canonical_dedup(
-        df, id_col,
-        _near_dup_edge_set(df, id_col, text_col, threshold, shingle_k,
-                           n_hashes, bands, max_bucket))
+    with owned():  # see _near_dup_edge_set: spent once CC has labelled
+        return canonical_dedup(
+            df, id_col,
+            _near_dup_edge_set(df, id_col, text_col, threshold, shingle_k,
+                               n_hashes, bands, max_bucket))
 
 
 def near_dup_downsample(
@@ -1772,11 +1714,12 @@ def near_dup_downsample(
     emitted pair) is skipped entirely — the window only needs
     connectivity. Survivors are the ``keep_per_cluster`` smallest ids
     per cluster; rows in no cluster pass through untouched."""
-    return cluster_downsample(
-        df, id_col,
-        _near_dup_edge_set(df, id_col, text_col, threshold, shingle_k,
-                           n_hashes, bands, max_bucket),
-        keep_per_cluster=keep_per_cluster)
+    with owned():  # see _near_dup_edge_set: spent once CC has labelled
+        return cluster_downsample(
+            df, id_col,
+            _near_dup_edge_set(df, id_col, text_col, threshold, shingle_k,
+                               n_hashes, bands, max_bucket),
+            keep_per_cluster=keep_per_cluster)
 
 
 def near_dup_cluster_sizes(
@@ -1797,9 +1740,10 @@ def near_dup_cluster_sizes(
     incident to an edge), but a text duplicated m times costs m−1 hash
     edges instead of m²/2 verified pairs. Output: (cluster_size,
     n_clusters), size ≥ 2, sorted."""
-    return dup_cluster_sizes(
-        _near_dup_edge_set(df, id_col, text_col, threshold, shingle_k,
-                           n_hashes, bands, max_bucket))
+    with owned():  # see _near_dup_edge_set: spent once CC has labelled
+        return dup_cluster_sizes(
+            _near_dup_edge_set(df, id_col, text_col, threshold, shingle_k,
+                               n_hashes, bands, max_bucket))
 
 
 def _near_dup_edge_set(
@@ -1820,23 +1764,28 @@ def _near_dup_edge_set(
     (assume_unique holds: the two edge families are disjoint — near
     edges connect distinct texts, exact edges identical ones).
 
+    Every frame this materializes (the keyed8 gate scan, minhash base,
+    representatives, verify candidates) is read only by the returned
+    edges, and connected components consumes those eagerly: the three
+    callers run it inside an `owned()` block, which releases them all
+    once the components are labelled.
+
     (r12 note: pinning the (id, text) projection here to de-duplicate
     the DAG's ~6 corpus-reading leaf stages was A/B-measured NET-
     NEGATIVE at sf0.1 — min 4.7 s pinned vs 4.1 s lazy, interleaved
     min-of-3 — the cache fill serializes what idle cores absorb; the
     scale decades get their eager materialization from the verify
     kernel's candidate count instead.)"""
-    from .._utils import pin, unpin
 
     hit = _gate_memo(df, text_col)
     keyed8 = None
     if hit is not None:
         do_collapse = hit[0]
     else:
-        # one pruned (id, xxhash64(text)) scan, pinned: the gate agg
-        # materializes it and the exact8 edges below read the 16-byte
+        # one pruned (id, xxhash64(text)) scan, materialized: the gate
+        # agg fills it and the exact8 edges below read the 16-byte
         # cache twice instead of re-scanning text for each join side
-        keyed8 = pin(df.select(F.col(id_col).alias("__m"),
+        keyed8 = materialize(df.select(F.col(id_col).alias("__m"),
                                F.xxhash64(F.col(text_col)).alias("__h")))
         n, nd = keyed8.agg(F.count(F.lit(1)),
                            F.approx_count_distinct("__h")).first()
@@ -1860,27 +1809,24 @@ def _near_dup_edge_set(
         # LSH pairs (identical texts ≤ cap pair both ways) only repeat
         # min() work in the CC — see connected_components.
         if keyed8 is None:  # memoized gate skipped the fused scan
-            keyed8 = pin(df.select(F.col(id_col).alias("__m"),
-                                   F.xxhash64(F.col(text_col)).alias("__h")))
+            keyed8 = materialize(df.select(
+                F.col(id_col).alias("__m"),
+                F.xxhash64(F.col(text_col)).alias("__h")))
         rep8 = keyed8.groupBy("__h").agg(F.min("__m").alias("id_a"))
         exact8 = (keyed8.join(rep8, "__h")
                   .where(F.col("id_a") != F.col("__m"))
                   .select("id_a", F.col("__m").alias("id_b")))
         return pairs.unionByName(exact8)
-    if keyed8 is not None:  # collapse branch re-keys with text riding
-        unpin(keyed8)
     # heavy exact duplication: collapse to representatives. The rep
     # corpus comes from ONE (hash, id, text) shuffle with a struct-min
     # by id per hash group (no corpus-vs-reps semi-join pass); the
     # member→rep edges come from a SKINNY hash join — (id, hash) only,
     # 16 bytes/row, never a per-group member array that a
     # billion-times-duplicated text would blow up.
-    from .._utils import pin
-
     keyed = df.select(F.col(id_col).alias("__m"),
                       F.col(text_col).alias("__t"),
                       F.xxhash64(F.col(text_col)).alias("__h"))
-    rep = pin(keyed.groupBy("__h").agg(
+    rep = materialize(keyed.groupBy("__h").agg(
         F.min(F.struct("__m", "__t")).alias("__r")))
     reps_df = rep.select(F.col("__r.__m").alias(id_col),
                          F.col("__r.__t").alias(text_col))
@@ -2142,65 +2088,6 @@ def strip_boilerplate(docs: DataFrame, id_col: str, text_col: str,
             .cast("long").alias("n_removed"),
         )
         .withColumnRenamed("__id", id_col)
-    )
-
-
-def fingerprint_overlap_pairs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_shared: int = 2,
-    window: int = 4,
-    sample_mod: int = 8,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """MOSS-style cross-document overlap: pairs of documents sharing at
-    least ``min_shared`` sampled rolling-window fingerprints
-    (text.fingerprint_set) — catches copied PASSAGES that whole-document
-    minhash misses when the surrounding text differs.
-
-    Plan mirrors the LSH bucket join: explode each document's
-    fingerprint set (density 1/sample_mod of word windows), ONE groupBy
-    on the fingerprint value with a ``max_bucket`` cap (a fingerprint
-    shared by more docs than that is boilerplate, not plagiarism —
-    capped exactly like the minhash buckets), pairs within buckets,
-    then a groupBy counting distinct shared fingerprints per pair.
-    Never all-pairs; the pair term is bounded by max_bucket² per
-    fingerprint.
-
-    Output: (id_a, id_b, shared) with id_a < id_b, shared ≥ min_shared.
-    """
-    from .text import fingerprint_set
-
-    fps = docs.select(
-        F.col(id_col).alias("__id"),
-        F.explode(fingerprint_set(text_col, window=window,
-                                  sample_mod=sample_mod)).alias("__fp"),
-    )
-    buckets = (
-        fps.groupBy("__fp")
-        .agg(F.collect_set("__id").alias("ids"))
-        .where((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-        .select("__fp", F.array_sort("ids").alias("ids"))
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + 2,
-                                F.greatest(F.size("ids") - i - 1, F.lit(0))),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.id_a", "p.id_b")
-    return (
-        pairs.groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .where(F.col("shared") >= min_shared)
     )
 
 

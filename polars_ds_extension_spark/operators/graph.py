@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .._utils import release_checkpoint
+from .._utils import materialize, owned, release
 
 __all__ = ["pagerank", "degree_stats", "triangle_count"]
 
@@ -156,23 +156,8 @@ def pagerank(
 
     pr = nodes.select("node", "out_deg", "__s",
                       F.col("__s").alias("rank"))
-    prev_ckpt = None
-    pending_pins: list = []
-    from .._utils import pin, unpin
-    for it in range(n_iter):
-        # r15: each iteration consumes pr TWICE — the dangling-mass
-        # broadcast subtree and the contrib join — and Spark does not
-        # CSE the two, so an unpinned pr re-evaluated its whole
-        # iteration chain per consumer (2^k leaf evaluations between
-        # checkpoints; measured: 3-iteration pagerank spent most of
-        # its wall re-running earlier iterations). Pin the node-sized
-        # rank frame per iteration (narrow rows, disk-spillable, LRU-
-        # evicted): the broadcast build materializes it once and every
-        # later read is a cache hit. The eager localCheckpoint below
-        # still truncates lineage every checkpoint_every rounds.
-        if it > 0:
-            pr = pin(pr)
-            pending_pins.append(pr)
+
+    def _step(pr):
         # dangling mass as a broadcast 1-row scalar (the house
         # with_global_totals shape) — NOT a .first() per iteration,
         # which would run an action (and the whole lineage) n_iter
@@ -188,32 +173,44 @@ def pagerank(
                    "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c").alias("in_rank")))
-        pr = (nodes.join(contrib, "node", "left")
-              .crossJoin(F.broadcast(dang))
-              .select("node", "out_deg", "__s",
-                      (teleport + dang_term
-                       + F.lit(damping)
-                       * F.coalesce("in_rank", F.lit(0.0))).alias("rank")))
-        if (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
+        return (nodes.join(contrib, "node", "left")
+                .crossJoin(F.broadcast(dang))
+                .select("node", "out_deg", "__s",
+                        (teleport + dang_term
+                         + F.lit(damping)
+                         * F.coalesce("in_rank", F.lit(0.0))).alias("rank")))
+
+    # r15: each iteration consumes pr TWICE — the dangling-mass
+    # broadcast subtree and the contrib join — and Spark does not CSE
+    # the two, so an uncached pr re-evaluated its whole iteration chain
+    # per consumer (2^k leaf evaluations between checkpoints; measured:
+    # 3-iteration pagerank spent most of its wall re-running earlier
+    # iterations). Every iteration after the first therefore
+    # materializes the node-sized rank frame (narrow rows,
+    # disk-spillable): the broadcast build computes it once and every
+    # later read is a cache hit. An eager localCheckpoint every
+    # checkpoint_every rounds truncates lineage; the rounds before it
+    # run in their own owned() block, released once the checkpoint has
+    # superseded them. The rounds after the last checkpoint feed the
+    # returned lazy frame, so their caches belong to the caller.
+    prev_ckpt = None
+    for start in range(0, n_iter, checkpoint_every):
+        stop = min(start + checkpoint_every, n_iter)
+        if stop == n_iter:
+            for it in range(start, stop):
+                pr = _step(materialize(pr) if it > 0 else pr)
+            break
+        with owned():
+            for it in range(start, stop):
+                pr = _step(materialize(pr) if it > 0 else pr)
             pr = pr.localCheckpoint(eager=True)
-            # the chain's PREVIOUS checkpoint is superseded once the
-            # new one is eagerly materialized — release its storage
-            # (df.unpersist is a no-op on checkpoints; see
-            # _utils.release_checkpoint). The last checkpoint is never
-            # released: the returned frame derives from it.
-            if prev_ckpt is not None:
-                release_checkpoint(prev_ckpt)
-            prev_ckpt = pr
-            # the eager checkpoint truncated lineage, so every
-            # iteration pin behind it is superseded — release them NOW
-            # instead of leaving them to shared-LRU order (r15 advice:
-            # with checkpoint_every > ~_MAX_PINNED, or other pins
-            # interleaved by composed queries, LRU eviction could drop
-            # a pin that was still feeding the next iteration and
-            # silently restore the exponential re-evaluation)
-            for p in pending_pins:
-                unpin(p)
-            pending_pins = []
+        # the chain's PREVIOUS checkpoint is superseded once the new
+        # one is eagerly materialized (df.unpersist is a no-op on
+        # checkpoints; see _utils.release). The last checkpoint is
+        # never released: the returned frame derives from it.
+        if prev_ckpt is not None:
+            release(prev_ckpt)
+        prev_ckpt = pr
     return pr.select("node", "rank")
 
 

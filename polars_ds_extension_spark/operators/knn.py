@@ -1302,16 +1302,16 @@ def build_vector_index(
                      F.transform(F.col(vec_col),
                                  lambda x: x.cast("double")).alias("vec"))
              .withColumn("_ivf", F.lit(stamp)))
-    # r15: pin the inverted-file artifact. Production persists it to
-    # parquet; composed in-session use (search/update/stats on the
-    # live frame) re-ran the full assignment GEMM once per consumer
+    # r15: materialize the inverted-file artifact. Production persists
+    # it to parquet; composed in-session use (search/update/stats on
+    # the live frame) re-ran the full assignment GEMM once per consumer
     # subtree — the _ivf stamp-uniqueness collect alone replayed it
     # before the search did. Same rationale as build_near_dup_index's
-    # bucket pin. The in-session provenance attributes let
-    # _check_ivf_stamp skip the uniqueness scan on these exact frame
-    # objects (single-stamped by construction).
-    from .._utils import pin
-    cells = pin(cells)
+    # bucket artifact; the caller owns the cache. The in-session
+    # provenance attributes let _check_ivf_stamp skip the uniqueness
+    # scan on these exact frame objects (single-stamped by construction).
+    from .._utils import materialize
+    cells = materialize(cells)
     cents_out._pds_ivf_stamp = stamp
     cells._pds_ivf_stamp = stamp
     return cents_out, cells
@@ -1408,11 +1408,11 @@ def update_vector_index(
                                      lambda x: x.cast("double"))
                          .alias("vec"))
                  .withColumn("_ivf", F.lit(stamp)))
-    # r15: pin the updated artifact (see build_vector_index) — a
-    # downstream probe's stamp check + cell join would otherwise each
+    # r15: materialize the updated artifact (see build_vector_index) —
+    # a downstream probe's stamp check + cell join would otherwise each
     # replay the batch assignment and the old-cells read.
-    from .._utils import pin
-    out_cells = pin(cells.unionByName(
+    from .._utils import materialize
+    out_cells = materialize(cells.unionByName(
         new_cells.select(*cells.columns)))
     # both generations carry the SAME verified stamp (update requires
     # and checks it above), so the union is single-stamped by
@@ -1460,13 +1460,14 @@ def ivf_cosine_pairs(
         # assignment output, and Spark does not CSE the two subtrees —
         # the salted default was paying the Θ(N·C·d) assignment GEMM
         # TWICE (measured: semantic_dedup 7.7 s unsalted → 12.0 s when
-        # the r15 default engaged the census). Pin the tagged frame so
-        # assignment runs once and the census is a cached-read agg —
-        # the same persisted-heavy-intermediate discipline as the
-        # minhash verify base; LRU-evicted via _utils, released at
-        # harness boundaries by release_pins().
-        from .._utils import pin
-        tagged = pin(tagged)
+        # the r15 default engaged the census). Materialize the tagged
+        # frame so assignment runs once and the census is a cached-read
+        # agg — the same persisted-heavy-intermediate discipline as the
+        # minhash verify base. The returned pair plan reads it, so the
+        # caller owns it (an enclosing `_utils.owned()` block or the
+        # harness's clearCache()).
+        from .._utils import materialize
+        tagged = materialize(tagged)
         cell_n = F.broadcast(
             tagged.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("__cn")))
         tagged = tagged.join(cell_n, "centroid_id").withColumn(
@@ -1543,28 +1544,29 @@ def ivf_cell_stats(
     tagged = (ivf_assign(df, id_col, vec_col, cents, c_id, c_vec,
                          carry_vec=False)
               .select(F.col(id_col).alias("__id"), "centroid_id"))
-    if max_cell is not None:
-        # same single-assignment-pass discipline as ivf_cosine_pairs
-        # (r15): census + size agg share one pinned assignment output.
-        # This frame is skinny (id, cell) but the assignment feeding it
-        # is the same GEMM. Released below — this helper fully consumes
-        # its frames before returning.
-        from .._utils import pin, unpin
-        pinned = pin(tagged)
-        cell_n = F.broadcast(
-            pinned.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("__cn")))
-        tagged = pinned.join(cell_n, "centroid_id").withColumn(
-            "__salt",
-            F.when(F.col("__cn") <= max_cell, F.lit(0)).otherwise(F.pmod(
-                F.xxhash64(F.col("__id")),
-                F.ceil(F.col("__cn") / max_cell).cast("long"))),
-        ).drop("__cn")
-    else:
-        pinned = None
-        tagged = tagged.withColumn("__salt", F.lit(0))
-    sizes = (tagged.groupBy("centroid_id", "__salt")
-             .agg(F.count(F.lit(1)).alias("g")))
-    try:
+    from .._utils import materialize, owned
+
+    # this helper fully consumes its frames before returning, so it owns
+    # them: released on exit, the error path included
+    with owned():
+        if max_cell is not None:
+            # same single-assignment-pass discipline as ivf_cosine_pairs
+            # (r15): census + size agg share one materialized assignment
+            # output. This frame is skinny (id, cell) but the assignment
+            # feeding it is the same GEMM.
+            tagged = materialize(tagged)
+            cell_n = F.broadcast(tagged.groupBy("centroid_id").agg(
+                F.count(F.lit(1)).alias("__cn")))
+            tagged = tagged.join(cell_n, "centroid_id").withColumn(
+                "__salt",
+                F.when(F.col("__cn") <= max_cell, F.lit(0)).otherwise(F.pmod(
+                    F.xxhash64(F.col("__id")),
+                    F.ceil(F.col("__cn") / max_cell).cast("long"))),
+            ).drop("__cn")
+        else:
+            tagged = tagged.withColumn("__salt", F.lit(0))
+        sizes = (tagged.groupBy("centroid_id", "__salt")
+                 .agg(F.count(F.lit(1)).alias("g")))
         row = sizes.agg(
             F.sum("g").alias("n_vectors"),
             F.countDistinct("centroid_id").alias("n_cells"),
@@ -1573,11 +1575,6 @@ def ivf_cell_stats(
             F.expr("percentile(g, 0.99)").alias("p99_group"),
             F.sum(F.col("g") * (F.col("g") - 1) / 2).alias("within_pairs"),
         ).first()
-    finally:
-        # release on the error path too (r15 advice) — a failed .first()
-        # previously leaked the pin until LRU/release_pins
-        if pinned is not None:
-            unpin(pinned)
     return {
         "n_vectors": int(row["n_vectors"]),
         "n_cells": int(row["n_cells"]),

@@ -756,9 +756,9 @@ def source_overlap_matrix(
         .select("__src", F.xxhash64("__g").alias("__h"))
         .distinct()
     )
-    from .._utils import pin
+    from .._utils import materialize
 
-    grams = pin(grams)
+    grams = materialize(grams)
     counts = grams.groupBy("__src").agg(F.count(F.lit(1)).alias("n_grams"))
     a = grams.select(F.col("__src").alias("source_a"), "__h")
     b = grams.select(F.col("__src").alias("source_b"), "__h")
@@ -1060,9 +1060,9 @@ def dsir_log_weights(
     # r15: totals (inside the ratio broadcast) and the ratio projection
     # both consume vocab — unpinned, the two corpus/target token
     # aggregations ran twice. The frame is vocabulary-sized (it
-    # broadcasts downstream), so the pin is trivially bounded.
-    from .._utils import pin
-    vocab = pin(vocab)
+    # broadcasts downstream), so the cache is trivially bounded.
+    from .._utils import materialize
+    vocab = materialize(vocab)
     totals = vocab.agg(
         F.sum("__cr").alias("__nr"), F.sum("__ct").alias("__nt"),
         F.count(F.lit(1)).alias("__v"),

@@ -46,19 +46,19 @@ def key_skew_profile(df: DataFrame, key_col: str) -> DataFrame:
     THIS CALL; collecting the returned frame later (or over a
     nondeterministic source) evaluates the lazy aggregates against the
     then-current snapshot. Acceptable for a diagnostic — call and
-    collect it in one breath. The per-key counts frame is pinned for
-    the two reductions and stays in the LRU pin registry until the
-    registry evicts it (or `_utils.release_pins()`); it is not unpinned
-    here because the returned frame still reads it.
+    collect it in one breath. The per-key counts frame is materialized
+    for the two reductions and owned by the caller (its enclosing
+    `_utils.owned()` block, or a harness's ``clearCache()``): it is not
+    released here because the returned frame still reads it.
 
     Returns (n_keys, n_rows, max_cnt, mean_cnt, p50_cnt, p90_cnt,
     p99_cnt, top1_share, skew_ratio).
     """
-    from ._utils import pin
+    from ._utils import materialize
     from .plans.ranks import exact_quantiles
 
     c = F.col(key_col)
-    counts = pin(df.groupBy(c.alias("__k")).agg(
+    counts = materialize(df.groupBy(c.alias("__k")).agg(
         F.count(F.lit(1)).alias("__n")))
     qs = exact_quantiles(counts, {"__n": [0.5, 0.9, 0.99]})["__n"]
     n = F.col("__n")

@@ -16,6 +16,14 @@ the same semantics with the classic two-pass distributed prefix plan:
 
 The only driver round-trips are O(n_parts × groups) scalars. No stage
 ever holds more than one bucket's rows in one task.
+
+The per-bucket pass of step 2 is materialized once
+(`_utils.materialize`, memory with spill to disk): the offsets collect
+and every downstream job read it, and without it each consumer re-runs
+the scan + bucket window (measured 1.8x-2x whole-query cost). It is the
+narrow projected input, never wider. The returned frame reads it after
+the helper returns, so its owner is the caller — an enclosing
+`_utils.owned()` block, or the harness's ``clearCache()``.
 """
 
 from __future__ import annotations
@@ -25,10 +33,6 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-from .._utils import pin as _shared_pin
-from .._utils import release_pins  # noqa: F401  (re-export for callers)
 
 import math as _math
 
@@ -55,20 +59,7 @@ def _dlit(b: float) -> str:
     return f"CAST('{b!r}' AS DOUBLE)"
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    """Materialize the per-bucket pass once (memory, spill to disk).
-
-    The offsets collect AND every downstream job replay this frame's
-    lineage; without pinning, each consumer re-runs the scan + bucket
-    window (measured 1.8x-2x whole-query cost). This is the classic
-    materialization point of the two-pass prefix plan — the pinned frame
-    is the narrow projected input, never wider, and disk-spillable.
-    Registered with the shared LRU pin registry (_utils.pin) so old
-    queries' caches are evicted instead of accumulating for the session.
-    """
-    return _shared_pin(df)
-
-from .._utils import to_col
+from .._utils import materialize, to_col
 
 _PID = "__pds_pid"
 
@@ -157,7 +148,7 @@ def global_cumsum(df: DataFrame, order_col, value_cols: Sequence[str],
         .rangeBetween(Window.unboundedPreceding, 0)
     for c in value_cols:
         part = part.withColumn(f"__loc_{c}", F.sum(F.col(c)).over(w_local))
-    part = _pin(part)
+    part = materialize(part)
     offs = _offsets(part, keys, {c: F.sum(F.col(c)) for c in value_cols},
                     with_totals=with_totals)
     joined = part.join(offs, [_PID, *keys])
@@ -194,7 +185,7 @@ def global_min_rank(df: DataFrame, order_col,
     if tie_name is not None:
         w_ties = Window.partitionBy(_PID, *keys, to_col(order_col))
         part = part.withColumn(tie_name, F.count(F.lit(1)).over(w_ties))
-    part = _pin(part)
+    part = materialize(part)
     offs = _offsets(part, keys, {"n": F.count(F.lit(1)).cast("double")},
                     with_totals=total_name is not None)
     joined = part.join(offs, [_PID, *keys])
@@ -268,7 +259,7 @@ def global_rank_pair(df: DataFrame, x_col, y_col,
             "__tx", F.count(F.lit(1)).over(Window.partitionBy("__px", xc)))
         part = part.withColumn(
             "__ty", F.count(F.lit(1)).over(Window.partitionBy("__py", yc)))
-    part = _pin(part)
+    part = materialize(part)
     # r16 (r15 verdict #2): the offsets collect is the two axes'
     # MARGINAL bucket counts, computed server-side in ONE grouping-sets
     # aggregation over the pinned frame — ≤ 2·P rows cross the driver.
@@ -348,7 +339,7 @@ def global_rank_then_lag(df: DataFrame, x_col, y_col,
     wx = Window.partitionBy("__px").orderBy(xc)
     part = part.withColumn(
         "__prevs", F.lag(F.struct(F.col("__lry"), F.col("__py"))).over(wx))
-    part = _pin(part)
+    part = materialize(part)
     # r16 (r15 verdict #2): ONE grouping-sets aggregation computes both
     # axes' marginals server-side — the y-bucket counts (offset map) on
     # the {__py} set and each x-bucket's last-by-x row (its local y
@@ -422,7 +413,7 @@ def global_lag(df: DataFrame, order_col, col: str,
     part = _ranged(df, order_col, keys, n_parts)
     w_local = Window.partitionBy(_PID, *keys).orderBy(to_col(order_col))
     part = part.withColumn("__loc_lag", F.lag(F.col(col)).over(w_local))
-    part = _pin(part)
+    part = materialize(part)
     # last value of (pid, group) — max_by over the local order
     lasts = (
         part.groupBy(_PID, *keys)
@@ -690,7 +681,7 @@ def exact_quantiles(df: DataFrame, probs_by_col: "dict[str, Sequence[float]]",
                 F.array(*[F.expr(e) for e in mem_exprs]),
                 lambda s: s.isNotNull())).alias("s")
             ).select("s.tag", "s.pid", "s.v")
-            stacked = _pin(stacked)
+            stacked = materialize(stacked)
             stacked.count()  # one job: scan + metrics + pinned candidates
         else:
             observed.count()

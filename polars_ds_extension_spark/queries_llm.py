@@ -2680,15 +2680,15 @@ def curation_pipeline_v2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id",
                 (F.col("n_dup_windows") / F.col("n_windows"))
                 .alias("__ratio"))
-    from ._utils import pin
+    from ._utils import materialize
 
     gated = (docs
              .join(spans, "doc_id", "left")
              .where(F.coalesce(F.col("__ratio"), F.lit(0.0)) < 0.5)
              .where(T.quality_score("text") >= 0.75))
     # mixture_sample's rate-fit collects per-language counts, then the
-    # final agg re-reads the gate — pin so the span join runs once
-    gated = pin(gated)
+    # final agg re-reads the gate — materialize so the span join runs once
+    gated = materialize(gated)
     mixed = SMP.mixture_sample(gated, "doc_id", "lang", alpha=0.5)
     return mixed.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2796,13 +2796,13 @@ def perplexity_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-entropy is rounded to 6 dp BEFORE ranking so the cut point is
     engine-stable (ranking a raw double would let a last-ulp divergence
     flip rows at the boundary)."""
-    from ._utils import pin
+    from ._utils import materialize
 
     docs = load_table(spark, sf_dir, "documents")
     # pin the LM scores: the global-quantile rank plan reads its input
     # twice (range sketch + ranked pass) and would re-train/re-score the
     # whole bigram pipeline each time
-    scored = pin(R.bigram_lm_score(docs, "doc_id", "text", add_k=0.5)
+    scored = materialize(R.bigram_lm_score(docs, "doc_id", "text", add_k=0.5)
                  .select("doc_id", F.round("cross_entropy", 6).alias("ce")))
     kept = SMP.filter_by_global_quantile(scored, "ce", q=0.9,
                                          keep="bottom")
@@ -3148,17 +3148,17 @@ def curation_pipeline_v3_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                        T.fix_double_encoded(raw).alias("t"))
     # the gated frame feeds the LM train, the score join, and the final
     # accounting — pin it so the repair UDF + rule gate run ONCE, not
-    # once per consumer (functions/_utils.pin, LRU-released by bench)
-    from ._utils import pin
+    # once per consumer (_utils.materialize; the caller owns the cache)
+    from ._utils import materialize
 
-    g = pin(base.where(T.gopher_rules("t").getField("pass")))
+    g = materialize(base.where(T.gopher_rules("t").getField("pass")))
     # pin the LM scores too (r16, §5 — the same fix perplexity_gate
     # carries): the global-quantile rank plan reads its input twice
     # (range sketch + ranked pass) and re-trained/re-scored the whole
     # bigram pipeline each time — measured 3.6 s → ~2.1 s for the
     # lm+cut phase at sf0.1. The pinned frame is (doc_id, ce) — narrow,
     # per-doc, disk-spillable.
-    scored = pin(R.bigram_lm_score(g, "doc_id", "t", add_k=0.5)
+    scored = materialize(R.bigram_lm_score(g, "doc_id", "t", add_k=0.5)
                  .select("doc_id", F.round("cross_entropy", 6).alias("ce")))
     kept_ids = SMP.filter_by_global_quantile(
         scored, "ce", q=0.9, keep="bottom").select("doc_id")

@@ -210,7 +210,7 @@ def stream_near_dup_flags(
     re-planned per micro-batch like any stream-static join.
     Output stream: (id_col,) of contaminated docs, append mode.
     """
-    from .._utils import pin, spread
+    from .._utils import materialize, spread
     from ..operators.dedup import (char_shingles, jaccard_distinct,
                                    minhash_band_hashes)
 
@@ -221,12 +221,13 @@ def stream_near_dup_flags(
         return out.withColumn(
             bc, minhash_band_hashes(F.col(shc), n_hashes, bands))
 
-    # PIN the prepped reference: stream-static joins re-execute the
-    # static subtree EVERY micro-batch, and this plan reads it from two
-    # join sites — unpinned, the reference would re-shingle and re-band
-    # per batch per site (measured 15s -> ~4s at sf0.1). The pin is the
-    # build-the-index-once contract of any streaming filter.
-    r = pin(_prep(spread(ref), "__rid", "__rsh", "__rb"))
+    # MATERIALIZE the prepped reference: stream-static joins re-execute
+    # the static subtree EVERY micro-batch, and this plan reads it from
+    # two join sites — uncached, the reference would re-shingle and
+    # re-band per batch per site (measured 15s -> ~4s at sf0.1). It is
+    # the build-the-index-once contract of any streaming filter; the
+    # running query reads it after this returns, so the caller owns it.
+    r = materialize(_prep(spread(ref), "__rid", "__rsh", "__rb"))
     ref_bands = r.select(
         "__rid", F.posexplode("__rb").alias("band", "bh"))
     ref_sh = r.select("__rid", "__rsh")

@@ -81,6 +81,10 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL {name}: spark error {str(ex)[:300]}")
             continue
+        finally:
+            # frames a query materializes are owned by its caller: drop
+            # them here, or the cache grows across the whole catalog
+            spark.catalog.clearCache()
         if name not in oracles:
             print(f"ok   {name}: rows-only ({len(spark_pdf)} rows, no oracle)")
             continue

@@ -1,8 +1,8 @@
 """r15 optimization measurement harness.
 
 Times a named subset of catalog queries exactly like bench.py's catalog
-loop (count()-forced, min-of-N in one warmed session, release_pins +
-clearCache between runs) and optionally writes each query's
+loop (count()-forced, min-of-N in one warmed session, clearCache
+between runs) and optionally writes each query's
 .explain("formatted") to plans/r15/<query>_<tag>.txt.
 
 Usage:
@@ -38,7 +38,6 @@ def main() -> None:
     from pyspark.sql.functions import pandas_udf
 
     from polars_ds_extension_spark import queries as catalog
-    from polars_ds_extension_spark._utils import release_pins
     from polars_ds_extension_spark.session import get_spark
     from polars_ds_extension_spark.sources import load_table
 
@@ -68,7 +67,6 @@ def main() -> None:
                 f.write(df._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution
                     .ExplainMode.fromString("formatted")))
-            release_pins()
             spark.catalog.clearCache()
         if runs == 0:
             continue
@@ -84,7 +82,6 @@ def main() -> None:
                 walls.append(float("nan"))
                 break
             finally:
-                release_pins()
                 spark.catalog.clearCache()
         if not walls:
             continue

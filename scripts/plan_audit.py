@@ -49,7 +49,6 @@ def window_over_single(plan: str) -> bool:
 
 def main() -> None:
     from polars_ds_extension_spark import queries as catalog
-    from polars_ds_extension_spark._utils import release_pins
     from polars_ds_extension_spark.session import get_spark
 
     spark = get_spark(app="pds-plan-audit")
@@ -68,7 +67,6 @@ def main() -> None:
             flags += 1
             continue
         finally:
-            release_pins()
             spark.catalog.clearCache()
         facts = []
         wos = window_over_single(plan)

@@ -19,3 +19,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(autouse=True)
+def _owned_frames():
+    """Run each test inside one `owned()` block: frames its operators
+    materialize for their caller are released when the test ends, so
+    the session-scoped Spark session does not accumulate caches."""
+    from polars_ds_extension_spark._utils import owned
+
+    with owned():
+        yield

@@ -423,3 +423,122 @@ def test_ivf_search_empty_queries(spark):
                        df, "vec_id", "embedding", k=2, n_centroids=2,
                        centroids="first")
     assert got.count() == 0
+
+
+# ------------------------------------------------- materialization lifetime
+
+def _persistent_ids(spark) -> set:
+    """Ids of the RDDs the SparkContext holds persisted (caches and
+    local checkpoints)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_owned_releases_on_exit_and_on_raise(spark):
+    from polars_ds_extension_spark._utils import materialize, owned
+
+    before = _persistent_ids(spark)
+    with owned():
+        a = materialize(spark.range(50).select((F.col("id") * 2).alias("x")))
+        assert a.count() == 50
+        with owned():  # the innermost block owns what it materializes
+            b = materialize(spark.range(50).select((F.col("id") * 3).alias("x")))
+            b.count()
+        assert not b.storageLevel.useMemory
+        assert a.storageLevel.useMemory
+        assert _persistent_ids(spark) - before
+    assert not a.storageLevel.useMemory
+    assert not (_persistent_ids(spark) - before)
+
+    with pytest.raises(RuntimeError, match="boom"):
+        with owned():
+            c = materialize(spark.range(50).select((F.col("id") * 5).alias("x")))
+            c.count()
+            raise RuntimeError("boom")
+    assert not c.storageLevel.useMemory
+    assert not (_persistent_ids(spark) - before)
+
+
+def test_escaping_frame_outside_any_block_is_cached_until_clear_cache(spark):
+    """key_skew_profile's per-key counts escape into its (lazy) result:
+    materialized outside any owned() block they are the caller's, and
+    only the caller (here clearCache) drops them."""
+    import contextvars
+
+    from polars_ds_extension_spark._utils import owned
+    from polars_ds_extension_spark.partition import key_skew_profile
+
+    df = spark.range(200).select((F.col("id") % 7).alias("k"))
+    before = _persistent_ids(spark)
+    # an empty context: no enclosing owned() block (not even the
+    # per-test one from conftest)
+    out = contextvars.Context().run(key_skew_profile, df, "k")
+    assert out.first()["n_keys"] == 7
+    held = _persistent_ids(spark) - before
+    assert held
+    with owned():  # an unrelated block does not release it
+        pass
+    assert out.first()["n_rows"] == 200
+    assert held <= _persistent_ids(spark)
+    spark.catalog.clearCache()
+    assert not (held & _persistent_ids(spark))
+
+
+def test_connected_components_non_convergence_releases_everything(spark):
+    from polars_ds_extension_spark.operators.dedup import connected_components
+
+    chain = spark.range(40).select(F.col("id").alias("id_a"),
+                                   (F.col("id") + 1).alias("id_b"))
+    before = _persistent_ids(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, small_graph=True, max_iters=1)
+    assert not (_persistent_ids(spark) - before)
+
+
+def _docs(spark, n: int = 12):
+    return spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("the quick brown fox jumps over document "),
+                 (F.col("id") % 5).cast("string")).alias("text"))
+
+
+def test_prebuilt_base_lsh_parameters_are_checked(spark):
+    """A base built with shingle_k=12 passed to a shingle_k=8 call would
+    band with the wrong geometry and silently lose every match."""
+    from polars_ds_extension_spark.operators import dedup as D
+
+    docs = _docs(spark)
+    (base,) = D._overlap_minhash_bases([(docs, "doc_id", "text")],
+                                       shingle_k=12)
+    with pytest.raises(ValueError, match="_base was built"):
+        D.build_near_dup_index(docs, "doc_id", "text", shingle_k=8,
+                               _base=base)
+    buckets, shingles = D.build_near_dup_index(docs, "doc_id", "text",
+                                               shingle_k=8)
+    with pytest.raises(ValueError, match="_base was built"):
+        D.update_near_dup_index(docs, buckets, shingles, "doc_id", "text",
+                                shingle_k=8, _base=base)
+    with pytest.raises(ValueError, match="_base was built"):
+        D.near_dup_against_prebuilt(docs, buckets, shingles, "doc_id",
+                                    "text", shingle_k=8, _base=base)
+    with pytest.raises(ValueError, match="_base was built"):
+        D.near_dup_against_prebuilt(docs, buckets, shingles, "doc_id",
+                                    "text", shingle_k=8, _base=docs)
+    buckets, shingles = D.build_near_dup_index(docs, "doc_id", "text",
+                                               _base=base)
+    assert D.near_dup_against_prebuilt(docs, buckets, shingles, "doc_id",
+                                       "text", _base=base).count() == 12
+
+
+def test_overlap_minhash_bases_releases_on_failure(spark):
+    from polars_ds_extension_spark.operators import dedup as D
+
+    ok = _docs(spark)
+    bad = ok.select("doc_id", F.when(F.col("doc_id") == 3,
+                                     F.raise_error(F.lit("boom")))
+                    .otherwise(F.col("text")).alias("text"))
+    before = _persistent_ids(spark)
+    with pytest.raises(Exception, match="boom"):
+        D._overlap_minhash_bases([(ok, "doc_id", "text"),
+                                  (bad, "doc_id", "text"),
+                                  (_docs(spark, 20), "doc_id", "text")])
+    assert not (_persistent_ids(spark) - before)
