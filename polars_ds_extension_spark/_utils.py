@@ -149,3 +149,23 @@ def release(df) -> None:
             plan.rdd().unpersist(False)
     except Exception:  # session stopped or plan shape moved — leave it
         pass  # to the ContextCleaner
+
+
+# ------------------------------------------------------- helper threads
+
+def _run_threads(thunks: "Sequence") -> list:
+    """Run independent driver-side thunks (typically Spark actions) on
+    up to four helper threads and return their results in order.
+
+    Each thunk runs through `pyspark.inheritable_thread_target`, wrapped
+    on the caller's thread, so its jobs carry the caller's local
+    properties (job group, ``spark.job.tags``, scheduler pool) and stay
+    charged to the caller. Waits for every thunk, then re-raises the
+    first error in submission order."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as ex:
+        futures = [ex.submit(inheritable_thread_target(t)) for t in thunks]
+    return [f.result() for f in futures]

@@ -14,6 +14,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .._utils import _run_threads
+
 
 def describe(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """Long-format numeric profile: column, n, null_cnt, n_distinct,
@@ -58,14 +60,12 @@ def describe(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     # scan are independent jobs — submit them from two driver threads
     # so the second scan back-fills executors freed by the first's
     # tail instead of waiting for it.
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        f_stats = ex.submit(lambda: df.agg(*aggs).first().asDict())
-        f_nd = ex.submit(lambda: df.agg(*[
-            F.count_distinct(F.col(c)).alias(f"{c}__nd") for c in cols
-        ]).first().asDict())
-        row = f_stats.result()
-        row.update(f_nd.result())
+    row, nd = _run_threads([
+        lambda: df.agg(*aggs).first().asDict(),
+        lambda: df.agg(*[F.count_distinct(F.col(c)).alias(f"{c}__nd")
+                         for c in cols]).first().asDict(),
+    ])
+    row.update(nd)
     meds = exact_quantiles(df, {c: [0.5] for c in cols},
                            presketch=quantile_sketch_parse(row, cols))
     for c in cols:

@@ -77,22 +77,66 @@ def _dist2_np(X, C, rows: int = 512, temp_bytes: int = 1 << 21):
     return out
 
 
-def _assign_np(X, C, slab_bytes: int = 1 << 23):
-    """Argmin cluster per row of X against centroids C. Distances via
-    the cache-blocked exact kernel (`_dist2_np`); the row slab only
-    bounds the materialized (chunk × k) distance matrix."""
+def _topk_rows(score, ids, kk):
+    """Per-row top-kk selection by (score ASC, id ASC) with EXACT
+    boundary-tie handling. np.argpartition alone is unstable at the
+    kk-th boundary: when the kk-th and (kk+1)-th candidates score
+    exactly equal (guaranteed with duplicate/identical vectors — the
+    planted-pair scenario the recall oracles use), the emitted set
+    would depend on partition order instead of the lowest id. Fast
+    path: argpartition; rows where an UNSELECTED column ties the kk-th
+    score fall back to a full (score, id) lexsort of that row, so the
+    boundary resolves to the lowest id — the same ORDER BY (score, id)
+    contract the SQL replays pin. Returns (scores, ids) both sorted
+    (score ASC, id ASC) per row, shape (rows, kk)."""
     import numpy as np
 
-    n, k = X.shape[0], C.shape[0]
-    out = np.empty(n, dtype=np.int64)
-    d = np.empty(n, dtype=np.float64)
+    part = np.argpartition(score, kk - 1, axis=1)[:, :kk]
+    psc = np.take_along_axis(score, part, axis=1)
+    kth = psc.max(axis=1)
+    with np.errstate(invalid="ignore"):
+        n_le = (score <= kth[:, None]).sum(axis=1)
+    tied = np.nonzero(n_le > kk)[0]
+    if tied.size:
+        sc_t = score[tied]
+        ids_b = np.broadcast_to(ids[None, :], sc_t.shape)
+        full = np.lexsort((ids_b, sc_t), axis=1)[:, :kk]
+        part[tied] = full
+        psc[tied] = np.take_along_axis(sc_t, full, axis=1)
+    nid = ids[part]
+    order = np.lexsort((nid, psc), axis=1)
+    return (np.take_along_axis(psc, order, axis=1),
+            np.take_along_axis(nid, order, axis=1))
+
+
+def _nearest_np(X, C, n: int = 1, slab_bytes: int = 1 << 23):
+    """The one nearest-centroid step of the vector family (k-means, IVF
+    assignment and probing, PQ training and encoding): per row of X,
+    the ``n`` rows of C nearest by the exact d² of `_dist2_np`, ordered
+    by (d², row of C). With C sorted by centroid id, ties therefore go
+    to the LOWEST id — the ORDER BY (distance, cid) contract the SQL
+    replays pin. n=1 is a plain argmin (first occurrence); n>1 is the
+    exact-boundary `_topk_rows`. The row slab only bounds the
+    materialized (slab × |C|) distance matrix. Returns (rows, d2), both
+    shaped (|X| × min(n, |C|))."""
+    import numpy as np
+
+    k = C.shape[0]
+    n = min(n, k)
+    rows = np.empty((X.shape[0], n), dtype=np.int64)
+    d2 = np.empty((X.shape[0], n), dtype=np.float64)
+    pos = np.arange(k)
     chunk = max(1, int(slab_bytes // max(1, k * 8)))
-    for s0 in range(0, n, chunk):
+    for s0 in range(0, X.shape[0], chunk):
         sl = slice(s0, s0 + chunk)
-        d2 = _dist2_np(X[sl], C)
-        out[sl] = d2.argmin(axis=1)
-        d[sl] = d2[np.arange(d2.shape[0]), out[sl]]
-    return out, d
+        d = _dist2_np(X[sl], C)
+        if n == 1:
+            a = d.argmin(axis=1)
+            rows[sl, 0] = a
+            d2[sl, 0] = d[np.arange(len(a)), a]
+        else:
+            d2[sl], rows[sl] = _topk_rows(d, pos, n)
+    return rows, d2
 
 
 def kmeans_fit(
@@ -105,7 +149,7 @@ def kmeans_fit(
     id deterministic sample (uniform but still engine-stable).
 
     Distances use the direct (x−c)² float64 sum in both fit and assign
-    (see `_assign_np`) so an SQL replay evaluates the same expression.
+    (see `_nearest_np`) so an SQL replay evaluates the same expression.
     """
     import numpy as np
 
@@ -144,7 +188,7 @@ def kmeans_fit(
                 if not len(pdf):
                     continue
                 X = _to_mat(pdf[vec_col].values)
-                a, _ = _assign_np(X, Cm)
+                a = _nearest_np(X, Cm)[0][:, 0]
                 sums = np.zeros((kk, dd))
                 np.add.at(sums, a, X)
                 cnts = np.bincount(a, minlength=kk)
@@ -190,11 +234,11 @@ def kmeans_assign(df: DataFrame, id_col: str, vec_col: str,
             if not len(pdf):
                 continue
             X = _to_mat(pdf[vec_col].values)
-            a, d = _assign_np(X, Cm)
+            a, d = _nearest_np(X, Cm)
             yield pd.DataFrame({
                 id_col: pdf[id_col].values,
-                "cluster": a.astype("int32"),
-                "dist_sq": d})
+                "cluster": a[:, 0].astype("int32"),
+                "dist_sq": d[:, 0]})
 
     return df.select(id_col, vec_col).mapInPandas(_batches, schema)
 

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
-from .._utils import materialize, owned, release, spread
+from .._utils import _run_threads, materialize, owned, release, spread
 
 # 31-bit Mersenne prime modulus for the permutation family: products
 # a·h + b stay < 2^62, so the arithmetic is exact in int64 everywhere
@@ -284,16 +284,11 @@ def _overlap_minhash_bases(frames: "Sequence[tuple[DataFrame, str, str]]",
     (df, id_col, text_col). The bases are the caller's; if any build or
     count fails, every base already built is released before the error
     propagates."""
-    from concurrent.futures import ThreadPoolExecutor
-
     bases: list = []
     try:
         for df, i, t in frames:
             bases.append(_minhash_base(df, i, t, shingle_k, n_hashes, bands))
-        with ThreadPoolExecutor(max_workers=min(4, len(bases))) as ex:
-            futures = [ex.submit(b.count) for b in bases]
-        for f in futures:  # the executor has waited for all of them
-            f.result()
+        _run_threads([b.count for b in bases])
     except BaseException:
         for b in bases:
             release(b)
@@ -867,10 +862,7 @@ def near_dup_against_index(
     # r15 (guide §2.6): the two cache fills are independent
     # jobs — overlap them so the small batch's scan back-fills the
     # index scan's tail instead of waiting behind it.
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as _ex:
-        _fn, _fi = _ex.submit(nb.count), _ex.submit(ib.count)
-        _fn.result(), _fi.result()
+    _run_threads([nb.count, ib.count])
     idx_buckets = _index_buckets(ib, max_bucket)
     ish = ib.select(F.col("__id").alias("index_id"),
                     F.col("__sh").alias("shingles"))

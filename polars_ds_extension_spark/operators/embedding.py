@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .cluster import _dist2_np, _nearest_np, _to_mat
 from .knn import norm
 
 
@@ -72,7 +73,7 @@ def pq_train(df, vec_col: str, m: int = 8, k: int = 16,
     import numpy as np
 
     rows = df.select(F.col(vec_col)).limit(sample_rows).collect()
-    X = np.array([list(r[0]) for r in rows], dtype=np.float64)
+    X = _to_mat([r[0] for r in rows])
     d = X.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -92,8 +93,7 @@ def pq_train(df, vec_col: str, m: int = 8, k: int = 16,
         C = np.array(starts + [starts[-1]] * (k - len(starts)))
         if method == "kmeans":
             for _ in range(n_iters):
-                d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(2)
-                assign = d2.argmin(1)
+                assign = _nearest_np(Xs, C)[0][:, 0]
                 for j in range(k):
                     mask = assign == j
                     if mask.any():
@@ -124,12 +124,12 @@ def pq_encode(df, id_col: str, vec_col: str, codebooks) -> "DataFrame":
         m, k, sub = books.shape
         for pdf in it:
             ids = pdf[id_col].to_numpy()
-            X = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
+            X = _to_mat(pdf[vec_col])
             codes = np.zeros((len(ids), m), dtype=np.int64)
             for s in range(m):
-                Xs = X[:, s * sub:(s + 1) * sub]
-                d2 = ((Xs[:, None, :] - books[s][None, :, :]) ** 2).sum(2)
-                codes[:, s] = d2.argmin(1)  # argmin takes smallest index on ties
+                # ties to the smallest code (see cluster._nearest_np)
+                codes[:, s] = _nearest_np(X[:, s * sub:(s + 1) * sub],
+                                          books[s])[0][:, 0]
             yield pd.DataFrame({id_col: ids, "codes": list(codes)})
 
     return df.select(id_col, vec_col).mapInPandas(_batches, schema)
@@ -211,13 +211,12 @@ def pq_knn_join(queries, q_id: str, q_vec: str,
         m, K, sub = bk.shape
         for pdf in it:
             qids = pdf[q_id].to_numpy()
-            Q = np.array([list(v) for v in pdf[q_vec]], dtype=np.float64)
+            Q = _to_mat(pdf[q_vec])
             n_q = len(qids)
             # LUT: (n_q, m, K) exact query-subvector -> centroid dists
             lut = np.zeros((n_q, m, K))
             for s in range(m):
-                Qs = Q[:, s * sub:(s + 1) * sub]
-                lut[:, s, :] = ((Qs[:, None, :] - bk[s][None, :, :]) ** 2).sum(2)
+                lut[:, s, :] = _dist2_np(Q[:, s * sub:(s + 1) * sub], bk[s])
             # ADC score: sum over subspaces of LUT[code]
             scores = np.zeros((n_q, len(iids)))
             for s in range(m):
@@ -266,59 +265,25 @@ def ivfpq_knn_join(queries, q_id: str, q_vec: str,
     import numpy as np
     import pandas as pd
     from pyspark.sql.window import Window
-    from .knn import ivf_assign
+    from .knn import ivf_assign, ivf_assign_probe
 
     cells = ivf_assign(index, i_id, i_vec, centroids, c_id, c_vec)
     codes = pq_encode(index, i_id, i_vec, codebooks)
     i_id_type = index.schema[i_id].dataType.simpleString()
     tab = (cells.join(codes, i_id)
-           .select(F.col(c_id).alias("__cell"),
+           .select(F.col("centroid_id").alias("__cell"),
                    F.col(i_id).alias("__nid"), F.col("codes"))
            .repartition("__cell"))
-
-    crows = centroids.select(c_id, c_vec).collect()
-    cid = np.array([r[0] for r in crows], dtype=np.int64)
-    C = np.array([list(r[1]) for r in crows], dtype=np.float64)
-    sc = queries.sparkSession.sparkContext
-    bc_route = sc.broadcast((cid, C))
-    npb = min(nprobe, len(cid))
-
-    def _route(it):
-        ids_c, Cm = bc_route.value
-        # byte-bounded query chunk (the ivf_assign_probe r10 fix): the
-        # (chunk × C × dim) broadcast temporary stays ~256 MB however
-        # many coarse centroids the index uses — C ~ √N at scale
-        slab = max(1, (1 << 28) // max(1, Cm.shape[0] * Cm.shape[1] * 8))
-        for pdf in it:
-            if not len(pdf):
-                continue
-            Q = np.array([list(v) for v in pdf[q_vec]], dtype=np.float64)
-            orders = []
-            for s0 in range(0, len(Q), slab):
-                sl = slice(s0, s0 + slab)
-                d2 = ((Q[sl, None, :] - Cm[None, :, :]) ** 2).sum(2)
-                # deterministic nprobe pick: order by (distance, cid)
-                orders.append(np.lexsort(
-                    (np.broadcast_to(ids_c, d2.shape), d2),
-                    axis=1)[:, :npb])
-            order = (np.concatenate(orders) if len(orders) > 1
-                     else orders[0])
-            vecs = [list(v) for v in pdf[q_vec]]
-            yield pd.DataFrame({
-                q_id: np.repeat(pdf[q_id].to_numpy(), npb),
-                "__cell": ids_c[order].ravel(),
-                "__qv": [vecs[i] for i in range(len(vecs))
-                         for _ in range(npb)],
-            })
-
-    qf = queries.select(F.col(q_id)).schema.fields
-    routed = queries.select(q_id, q_vec).mapInPandas(
-        _route, f"{q_id} {qf[0].dataType.simpleString()}, __cell long, "
-                "__qv array<double>")
-
+    # each query rides to its nprobe nearest cells, ties to the lowest
+    # centroid id, its vector carried along for the ADC stage
+    routed = (ivf_assign_probe(queries, q_id, q_vec, centroids, c_id, c_vec,
+                               nprobe=nprobe, carry_vec=True)
+              .select(q_id, F.col("centroid_id").alias("__cell"),
+                      F.col(q_vec).alias("__qv")))
+    q_type = queries.schema[q_id].dataType.simpleString()
     joined = routed.join(tab, "__cell")
-    books = np.asarray(codebooks)
-    bc_books = sc.broadcast(books)
+    bc_books = queries.sparkSession.sparkContext.broadcast(
+        np.asarray(codebooks))
 
     def _adc(it):
         bk = bc_books.value
@@ -326,7 +291,7 @@ def ivfpq_knn_join(queries, q_id: str, q_vec: str,
         for pdf in it:
             if not len(pdf):
                 continue
-            Q = np.array([list(v) for v in pdf["__qv"]], dtype=np.float64)
+            Q = _to_mat(pdf["__qv"])
             Cd = np.array([list(c) for c in pdf["codes"]], dtype=np.int64)
             # ADC == distance to the PQ reconstruction: gather each
             # subspace's centroid and accumulate the squared residual
@@ -339,8 +304,7 @@ def ivfpq_knn_join(queries, q_id: str, q_vec: str,
                                 "adc_dist": d})
 
     scored = joined.mapInPandas(
-        _adc, f"{q_id} {qf[0].dataType.simpleString()}, __nid {i_id_type}, "
-              "adc_dist double")
+        _adc, f"{q_id} {q_type}, __nid {i_id_type}, adc_dist double")
     w = Window.partitionBy(q_id).orderBy(F.col("adc_dist").asc(),
                                          F.col("__nid").asc())
     return (scored.withColumn("rank", F.row_number().over(w))

@@ -22,6 +22,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .._utils import materialize, owned
+from .cluster import _nearest_np, _to_mat, _topk_rows
+
 
 # ------------------------------------------------------------ vector algebra
 
@@ -81,38 +84,6 @@ def _chunked_dist(Q, m, metric, slab_bytes: int = 1 << 28):
     return out
 
 
-def _topk_rows(score, ids, kk):
-    """Per-row top-kk selection by (score ASC, id ASC) with EXACT
-    boundary-tie handling. np.argpartition alone is unstable at the
-    kk-th boundary: when the kk-th and (kk+1)-th candidates score
-    exactly equal (guaranteed with duplicate/identical vectors — the
-    planted-pair scenario the recall oracles use), the emitted set
-    would depend on partition order instead of the lowest id. Fast
-    path: argpartition; rows where an UNSELECTED column ties the kk-th
-    score fall back to a full (score, id) lexsort of that row, so the
-    boundary resolves to the lowest id — the same ORDER BY (score, id)
-    contract the SQL replays pin. Returns (scores, ids) both sorted
-    (score ASC, id ASC) per row, shape (rows, kk)."""
-    import numpy as np
-
-    part = np.argpartition(score, kk - 1, axis=1)[:, :kk]
-    psc = np.take_along_axis(score, part, axis=1)
-    kth = psc.max(axis=1)
-    with np.errstate(invalid="ignore"):
-        n_le = (score <= kth[:, None]).sum(axis=1)
-    tied = np.nonzero(n_le > kk)[0]
-    if tied.size:
-        sc_t = score[tied]
-        ids_b = np.broadcast_to(ids[None, :], sc_t.shape)
-        full = np.lexsort((ids_b, sc_t), axis=1)[:, :kk]
-        part[tied] = full
-        psc[tied] = np.take_along_axis(sc_t, full, axis=1)
-    nid = ids[part]
-    order = np.lexsort((nid, psc), axis=1)
-    return (np.take_along_axis(psc, order, axis=1),
-            np.take_along_axis(nid, order, axis=1))
-
-
 # ---------------------------------------------------- brute force (broadcast)
 
 #: hard cap on broadcast index rows — at 128d float64 this is ~5 GB,
@@ -141,7 +112,7 @@ def _collect_index(index: DataFrame, i_id: str, i_vec: str,
             f"index exceeds the broadcast cap of {max_rows} rows; use "
             "ann_lsh_join / ivf_knn_join for index sets this large")
     ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    mat = _to_mat([r[1] for r in rows])
     return ids, mat
 
 
@@ -247,7 +218,7 @@ def knn_join(
         iids, m = bc.value
         for pdf in it:
             qids = pdf[q_id].to_numpy()
-            Q = np.array([list(v) for v in pdf[q_vec]], dtype=np.float64)
+            Q = _to_mat(pdf[q_vec])
             if metric == "cosine":
                 Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
                 score = -(Qn @ m.T)            # ascending = best first
@@ -331,7 +302,7 @@ def radius_count(
         m2 = (m * m).sum(1)
         for pdf in it:
             qids = pdf[q_id].to_numpy()
-            Q = np.array([list(v) for v in pdf[q_vec]], dtype=np.float64)
+            Q = _to_mat(pdf[q_vec])
             # each metric computes only what it needs — no discarded GEMM
             if metric == "cosine":
                 qn = np.linalg.norm(Q, axis=1, keepdims=True)
@@ -377,7 +348,7 @@ def radius_join(
         m2 = (m * m).sum(1)
         for pdf in it:
             qids = pdf[q_id].to_numpy()
-            Q = np.array([list(v) for v in pdf[q_vec]], dtype=np.float64)
+            Q = _to_mat(pdf[q_vec])
             # each metric computes only what it needs — no discarded GEMM
             if metric == "cosine":
                 qn = np.linalg.norm(Q, axis=1, keepdims=True)
@@ -534,7 +505,7 @@ def srp_bucket_stats(
 
     @pandas_udf("array<long>")
     def _sigs(vs: pd.Series) -> pd.Series:
-        X = np.array([list(v) for v in vs], dtype=np.float64)
+        X = _to_mat(vs)
         if X.ndim != 2 or not len(X):
             return pd.Series([[0] * n_tables] * len(vs))
         return pd.Series(list(srp_signatures_batch(X, n_tables, n_planes)))
@@ -622,7 +593,7 @@ def ann_lsh_join(
 
     @pandas_udf("array<long>")
     def _sigs(vs: pd.Series) -> pd.Series:
-        X = np.array([list(v) for v in vs], dtype=np.float64)
+        X = _to_mat(vs)
         if X.ndim != 2 or not len(X):
             return pd.Series([[0] * n_tables] * len(vs))
         return pd.Series(list(srp_signatures_batch(X, n_tables, n_planes)))
@@ -679,7 +650,7 @@ def ann_lsh_join(
         if m < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
         ids = pdf["__id"].to_numpy()
-        X = np.array([list(v) for v in pdf["__vec"]], dtype=np.float64)
+        X = _to_mat(pdf["__vec"])
         nrm = np.sqrt((X * X).sum(1))
         out = []
         chunk = max(1, (1 << 27) // max(1, m * 8))
@@ -724,13 +695,14 @@ def ivf_assign(
     carry_vec: bool = False,
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (l2, deterministic
-    tie-break toward the LOWEST centroid id).
+    tie-break toward the LOWEST centroid id): `ivf_assign_probe` with
+    one probe and no ``probe`` column.
 
     Centroids broadcast (centroid-count-sized by contract — √N rows at
     the prescribed scaling, a few MB even at 10⁹ vectors); the big side
     streams through one vectorized numpy argmin per Arrow batch — no
     shuffle at all. The distance is the direct (x−c)² float64 sum
-    (cluster.py:_assign_np), the same expression an SQL replay computes
+    (cluster._nearest_np), the same expression an SQL replay computes
     — NOT the x²−2xc+c² GEMM expansion, whose different rounding would
     jitter argmin near-ties across engines. A JVM crossJoin+struct-min
     formulation of this same contract measured ~30× slower at 20k×140
@@ -745,49 +717,71 @@ def ivf_assign(
     overhead at small scale — the r11 knn_auto_route probe was ~90%
     task scheduling on 10 MB of data) with zero extra plan nodes.
     """
-    import numpy as np
-    import pandas as pd
+    return ivf_assign_probe(df, id_col, vec_col, centroids, c_id, c_vec,
+                            nprobe=1, carry_vec=carry_vec).drop("probe")
 
-    from .cluster import _assign_np
 
+def _centroid_matrix(centroids: DataFrame, c_id: str, c_vec: str):
+    """(cids, C): the coarse quantizer every IVF step assigns against,
+    rows sorted by centroid id so the kernel's lowest-row tie-break is
+    the lowest-id one. Ids keep their natural dtype (ints -> int64,
+    strings -> str, decimals -> object): output schemas carry the
+    centroid frame's id type, so the ids must not be coerced."""
     crows = centroids.select(c_id, c_vec).collect()
     if not crows:
         raise ValueError(
-            "ivf_assign: centroid frame is empty — with centroids='first' "
-            "this means no row has id < n_centroids (the contract assumes "
+            "IVF centroid frame is empty — with centroids='first' this "
+            "means no row has id < n_centroids (the contract assumes "
             "dense 0-based ids); use centroids='kmeans'/'sample' or pass a "
             "prebuilt centroid frame for filtered/offset/string id spaces")
-    # natural dtype (ints -> int64, strings -> str, decimals -> object):
-    # the output schema derives cid_type from the centroid frame, so the
-    # collected ids must NOT be coerced to int64 — a string/decimal
-    # centroid id would raise here while the schema promised it back
     cids = np.array([r[0] for r in crows])
-    C = np.array([list(r[1]) for r in crows], dtype=np.float64)
-    # sort by centroid id so argmin's first-occurrence tie-break lands on
-    # the lowest cid — the ORDER BY (distance, cid) replay contract
     order = np.argsort(cids, kind="stable")
-    cids, C = cids[order], C[order]
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((cids, C))
-    id_type = df.schema[id_col].dataType.simpleString()
-    cid_type = centroids.schema[c_id].dataType.simpleString()
-    schema = f"{id_col} {id_type}, centroid_id {cid_type}"
-    if carry_vec:
-        schema += f", {vec_col} {df.schema[vec_col].dataType.simpleString()}"
+    return cids[order], _to_mat([r[1] for r in crows])[order]
 
-    def _batches(it):
-        ids_c, Cm = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            X = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            a, _ = _assign_np(X, Cm)
-            out = {id_col: pdf[id_col].values, "centroid_id": ids_c[a]}
-            if carry_vec:
-                out[vec_col] = pdf[vec_col].values
-            yield pd.DataFrame(out)
 
-    return df.select(id_col, vec_col).mapInPandas(_batches, schema)
+def _resolve_centroids(df: DataFrame, id_col: str, vec_col: str,
+                       centroids: "str | DataFrame", n_centroids: int,
+                       seed: int) -> "tuple[DataFrame, str, str]":
+    """(frame, id column, vector column) of the quantizer a
+    ``centroids=`` argument names: a prebuilt (centroid_id, centroid)
+    frame as given; "first" = the rows with id < n_centroids (the
+    SQL-replayable mode, dense 0-based ids); "sample"/"kmeans" via
+    `ivf_centroids`."""
+    if isinstance(centroids, DataFrame):
+        return centroids, "centroid_id", "centroid"
+    if centroids == "first":
+        return df.where(F.col(id_col) < n_centroids), id_col, vec_col
+    return (ivf_centroids(df, id_col, vec_col, n_centroids,
+                          method=centroids, seed=seed),
+            "centroid_id", "centroid")
+
+
+def _salted_cells(tagged: DataFrame, max_cell: "int | None") -> DataFrame:
+    """Add the ``__salt`` sub-cell key to an (__id, centroid_id, ...)
+    assignment frame: cells larger than ``max_cell`` split into
+    ceil(n/max_cell) sub-cells by id hash, so no (cell, salt) group
+    exceeds ~max_cell rows however skewed the quantizer; None keeps one
+    group per cell.
+
+    The cell census and the per-group consumer both read the
+    assignment, and Spark does not share the two subtrees: unmaterialized,
+    the Θ(N·C·d) assignment ran TWICE (measured on a 32-core host:
+    semantic_dedup 7.7 s unsalted → 12.0 s salted). So the frame is materialized once and the
+    census is a cached-read agg, broadcast (≤ n_centroids rows) into the
+    salt join. The returned plan reads the materialized frame, so its
+    owner is the caller's (an enclosing `_utils.owned()` block or the
+    harness's clearCache())."""
+    if max_cell is None:
+        return tagged.withColumn("__salt", F.lit(0))
+    tagged = materialize(tagged)
+    cell_n = F.broadcast(
+        tagged.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("__cn")))
+    return tagged.join(cell_n, "centroid_id").withColumn(
+        "__salt",
+        F.when(F.col("__cn") <= max_cell, F.lit(0)).otherwise(F.pmod(
+            F.xxhash64(F.col("__id")),
+            F.ceil(F.col("__cn") / max_cell).cast("long"))),
+    ).drop("__cn")
 
 
 def ivf_centroids(
@@ -820,7 +814,7 @@ def ivf_centroids(
     frac = min(1.0, pool_n / max(total, 1) * 1.5)
     pool = (df.select(vec_col).sample(fraction=frac, seed=seed)
             .limit(pool_n).collect())
-    X = np.array([list(r[0]) for r in pool], dtype=np.float64)
+    X = _to_mat([r[0] for r in pool])
     if X.shape[0] < n_centroids:
         raise ValueError(
             f"ivf_centroids: sample ({X.shape[0]}) smaller than "
@@ -829,10 +823,8 @@ def ivf_centroids(
     if method == "sample":
         C = X[rng.choice(X.shape[0], n_centroids, replace=False)]
     elif method == "kmeans":
-        from .cluster import _assign_np
-
         # farthest-point init, then Lloyd on the sample. Assignment via
-        # the slab-chunked _assign_np: the naive (pool × C × dim)
+        # the slab-chunked _nearest_np: the naive (pool × C × dim)
         # broadcast temporary is ~64·C²·d doubles — at the auto-route
         # scale (C = √N ≈ 2237 for a 5M-row index) that is ~300 GB on
         # the DRIVER, the same unbounded-slab class the r9 advice
@@ -844,7 +836,7 @@ def ivf_centroids(
             d2 = np.minimum(d2, ((X - C[-1]) ** 2).sum(1))
         C = np.array(C)
         for _ in range(kmeans_iters):
-            lab, _ = _assign_np(X, C)
+            lab = _nearest_np(X, C)[0][:, 0]
             for j in range(n_centroids):
                 m = lab == j
                 if m.any():
@@ -891,7 +883,10 @@ def ivf_knn_join(
     in-memory pandas frame before scoring, so only the salting keeps a
     degenerate cell from OOMing an executor — the slab chunking below
     bounds the SCORE MATRIX, not the group itself. Pass max_cell=None
-    only when the cell-size distribution is known to be bounded.
+    only when the cell-size distribution is known to be bounded. With
+    max_cell set the assignment is materialized once and read by both
+    the cell census and the search (`_salted_cells`); the returned plan
+    reads that cache, so the caller owns it.
 
     The within-cell search is ONE numpy GEMM + argpartition per
     (cell, salt) group (`applyInPandas`): the n²/C pair term runs as
@@ -902,38 +897,15 @@ def ivf_knn_join(
     ~100× smaller constant. The (query-chunk × cell) score matrix is
     slab-chunked to ~128 MB. Output: (id, neighbor_id, cosine, rank).
     """
-    import numpy as np
-    import pandas as pd
-
-    if isinstance(centroids, DataFrame):
-        cents = centroids
-        c_id, c_vec = "centroid_id", "centroid"
-    elif centroids == "first":
-        cents, c_id, c_vec = df.where(F.col(id_col) < n_centroids), id_col, vec_col
-    else:
-        cents = ivf_centroids(df, id_col, vec_col, n_centroids,
-                              method=centroids, seed=seed)
-        c_id, c_vec = "centroid_id", "centroid"
+    cents, c_id, c_vec = _resolve_centroids(df, id_col, vec_col, centroids,
+                                            n_centroids, seed)
     # carry_vec: (id, vec, cell) straight off the assignment batch —
     # no corpus-wide join-back-by-id (see ivf_assign)
-    tagged = (ivf_assign(df, id_col, vec_col, cents, c_id, c_vec,
-                         carry_vec=True)
-              .select(F.col(id_col).alias("__id"),
-                      F.col(vec_col).alias("__vec"), "centroid_id"))
-    if max_cell is not None:
-        # salt oversized cells into ceil(n/max_cell) sub-cells; the count
-        # frame is ≤ n_centroids rows → broadcast join, no extra shuffle
-        # of the big side beyond the cell-key shuffle it already does
-        cell_n = F.broadcast(
-            tagged.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("__cn")))
-        tagged = tagged.join(cell_n, "centroid_id").withColumn(
-            "__salt",
-            F.when(F.col("__cn") <= max_cell, F.lit(0)).otherwise(F.pmod(
-                F.xxhash64(F.col("__id")),
-                F.ceil(F.col("__cn") / max_cell).cast("long"))),
-        ).drop("__cn")
-    else:
-        tagged = tagged.withColumn("__salt", F.lit(0))
+    tagged = _salted_cells(
+        ivf_assign(df, id_col, vec_col, cents, c_id, c_vec, carry_vec=True)
+        .select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"),
+                "centroid_id"),
+        max_cell)
     id_type = df.schema[id_col].dataType.simpleString()
     schema = (f"{id_col} {id_type}, neighbor_id {id_type}, "
               "cosine double, rank int")
@@ -944,7 +916,7 @@ def ivf_knn_join(
             return pd.DataFrame(
                 {id_col: [], "neighbor_id": [], "cosine": [], "rank": []})
         ids = pdf["__id"].to_numpy()
-        X = np.array([list(v) for v in pdf["__vec"]], dtype=np.float64)
+        X = _to_mat(pdf["__vec"])
         # norms via the same dot-then-sqrt float64 expression the JVM /
         # SQL replay uses; cosine = dot / (na·nb)
         nrm = np.sqrt((X * X).sum(1))
@@ -980,24 +952,16 @@ def ivf_assign_probe(
     carry_vec: bool = False,
 ) -> DataFrame:
     """Assign each vector to its ``nprobe`` nearest centroids (l2,
-    ties toward the LOWEST centroid id — the multi-probe generalization
-    of ivf_assign, same broadcast + vectorized-batch shape, no
-    shuffle). Output: (id_col, centroid_id, probe) with probe 1..nprobe.
+    ties toward the LOWEST centroid id): one `cluster._nearest_np` call
+    per Arrow batch against the broadcast id-sorted centroid matrix, no
+    shuffle; `ivf_assign` is its one-probe case. Output: (id_col,
+    centroid_id, probe) with probe 1..nprobe.
     ``carry_vec=True`` passes the vector through (repeated per probe) —
     see ivf_assign; replaces the join-back-by-id in the search paths.
     """
-    crows = centroids.select(c_id, c_vec).collect()
-    if not crows:
-        raise ValueError(
-            "ivf_assign_probe: centroid frame is empty — see ivf_assign; "
-            "'first' centroids require dense 0-based ids")
-    cids = np.array([r[0] for r in crows])
-    C = np.array([list(r[1]) for r in crows], dtype=np.float64)
-    order = np.argsort(cids, kind="stable")
-    cids, C = cids[order], C[order]
+    cids, C = _centroid_matrix(centroids, c_id, c_vec)
     npb = min(nprobe, len(cids))
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((cids, C))
+    bc = df.sparkSession.sparkContext.broadcast((cids, C))
     id_type = df.schema[id_col].dataType.simpleString()
     cid_type = centroids.schema[c_id].dataType.simpleString()
     schema = f"{id_col} {id_type}, centroid_id {cid_type}, probe int"
@@ -1005,34 +969,16 @@ def ivf_assign_probe(
         schema += f", {vec_col} {df.schema[vec_col].dataType.simpleString()}"
 
     def _batches(it):
-        from .cluster import _dist2_np
-
         ids_c, Cm = bc.value
-        pos = np.arange(len(ids_c))
-        # row slab bounds the materialized (slab × n_centroids) distance
-        # matrix; the (x−c)² arithmetic itself runs through the cache-
-        # blocked exact kernel (see cluster._dist2_np — r16: kills the
-        # 32-worker memory-bandwidth contention of the old ~256 MB
-        # broadcast temporary, bit-identical values)
-        slab = max(1, (1 << 23) // max(1, Cm.shape[0] * 8))
         for pdf in it:
             if not len(pdf):
                 continue
-            X = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            sels = []
-            for s0 in range(0, len(X), slab):
-                sl = slice(s0, s0 + slab)
-                # direct (x-c)² sum — the same float64 expression the
-                # SQL replay computes (see ivf_assign)
-                d = _dist2_np(X[sl], Cm)
-                _, sel = _topk_rows(d, pos, npb)
-                sels.append(sel)
-            sel = np.concatenate(sels) if len(sels) > 1 else sels[0]
+            sel, _ = _nearest_np(_to_mat(pdf[vec_col]), Cm, npb)
             out = {
                 id_col: np.repeat(pdf[id_col].values, npb),
                 "centroid_id": ids_c[sel].ravel(),
                 "probe": np.tile(np.arange(1, npb + 1, dtype=np.int32),
-                                 len(X)),
+                                 len(pdf)),
             }
             if carry_vec:
                 out[vec_col] = np.repeat(pdf[vec_col].values, npb)
@@ -1073,15 +1019,8 @@ def ivf_search(
     (centroid_id, centroid) DataFrame.
     Output: (q_id, neighbor_id, cosine, rank).
     """
-    if isinstance(centroids, DataFrame):
-        cents, c_id, c_vec = centroids, "centroid_id", "centroid"
-    elif centroids == "first":
-        cents, c_id, c_vec = (index.where(F.col(i_id) < n_centroids),
-                              i_id, i_vec)
-    else:
-        cents = ivf_centroids(index, i_id, i_vec, n_centroids,
-                              method=centroids, seed=seed)
-        c_id, c_vec = "centroid_id", "centroid"
+    cents, c_id, c_vec = _resolve_centroids(index, i_id, i_vec, centroids,
+                                            n_centroids, seed)
     # carry_vec: the (id, vec, centroid_id) rows come straight out of
     # the scan-side assignment batch — no corpus-wide join-back-by-id
     # (a full embedding-lake shuffle at 100 TB; 2-3 stages of pure task
@@ -1117,8 +1056,8 @@ def _ivf_cell_topk(qtag: DataFrame, itag: DataFrame, q_id: str, k: int,
                 {q_id: [], "neighbor_id": [], "cosine": [], "rank": []})
         qids = qpdf["__qid"].to_numpy()
         iids = ipdf["__iid"].to_numpy()
-        Q = np.array([list(v) for v in qpdf["__qvec"]], dtype=np.float64)
-        X = np.array([list(v) for v in ipdf["__ivec"]], dtype=np.float64)
+        Q = _to_mat(qpdf["__qvec"])
+        X = _to_mat(ipdf["__ivec"])
         qn = np.sqrt((Q * Q).sum(1))
         xn = np.sqrt((X * X).sum(1))
         out = []
@@ -1152,8 +1091,9 @@ def _ivf_cell_topk(qtag: DataFrame, itag: DataFrame, q_id: str, k: int,
 
 # ----------------------------------------- persisted / updatable IVF index
 
-def _ivf_stamp_of(crows, train: "str | None" = None) -> str:
-    """Geometry + content fingerprint of a centroid set:
+def _ivf_stamp_of(C, train: "str | None" = None) -> str:
+    """Geometry + content fingerprint of an id-sorted centroid matrix
+    (`_centroid_matrix`):
     "n_centroids/dim/sha1[:12] of the id-ordered, 9dp-rounded centroid
     matrix", plus an optional 4th training-provenance field (r13
     verdict trivia: e.g. "kmeans-pool1024" — the centroid-training
@@ -1168,12 +1108,9 @@ def _ivf_stamp_of(crows, train: "str | None" = None) -> str:
     (recall loss indistinguishable from hard queries)."""
     import hashlib
 
-    cids = np.array([r[0] for r in crows])
-    C = np.array([list(r[1]) for r in crows], dtype=np.float64)
-    order = np.argsort(cids, kind="stable")
-    C = np.round(C[order], 9)
+    C = np.round(C, 9)
     fp = hashlib.sha1(C.tobytes()).hexdigest()[:12]
-    base = f"{len(crows)}/{C.shape[1]}/{fp}"
+    base = f"{C.shape[0]}/{C.shape[1]}/{fp}"
     return f"{base}/{train}" if train else base
 
 
@@ -1269,22 +1206,10 @@ def build_vector_index(
     against THESE centroids, so update ≡ rebuild holds frame-for-frame
     against `build_vector_index(old ∪ new, centroids=<same frame>)`.
     """
-    if isinstance(centroids, DataFrame):
-        cents, c_id, c_vec = centroids, "centroid_id", "centroid"
-    elif centroids == "first":
-        cents, c_id, c_vec = (df.where(F.col(id_col) < n_centroids),
-                              id_col, vec_col)
-    else:
-        cents = ivf_centroids(df, id_col, vec_col, n_centroids,
-                              method=centroids, seed=seed)
-        c_id, c_vec = "centroid_id", "centroid"
-    crows = cents.select(c_id, c_vec).collect()
-    if not crows:
-        raise ValueError(
-            "build_vector_index: centroid frame is empty — see "
-            "ivf_assign; 'first' centroids require dense 0-based ids")
-    stamp = _ivf_stamp_of(crows,
-                          train=getattr(cents, "_pds_train_meta", None))
+    cents, c_id, c_vec = _resolve_centroids(df, id_col, vec_col, centroids,
+                                            n_centroids, seed)
+    cids, C = _centroid_matrix(cents, c_id, c_vec)
+    stamp = _ivf_stamp_of(C, train=getattr(cents, "_pds_train_meta", None))
     spark = df.sparkSession
     # centroid_id keeps the RESOLVED centroid frame's id type: 'first'
     # centroids carry the corpus id type, but kmeans/sample/prebuilt
@@ -1293,7 +1218,7 @@ def build_vector_index(
     # (r11 review finding)
     cid_type = cents.schema[c_id].dataType.simpleString()
     cents_out = spark.createDataFrame(
-        [(r[0], [float(x) for x in r[1]]) for r in crows],
+        list(zip(cids.tolist(), C.tolist())),
         schema=f"centroid_id {cid_type}, "
                "centroid array<double>").withColumn("_ivf", F.lit(stamp))
     cells = (ivf_assign(df, id_col, vec_col, cents_out.drop("_ivf"),
@@ -1310,7 +1235,6 @@ def build_vector_index(
     # bucket artifact; the caller owns the cache. The in-session
     # provenance attributes let _check_ivf_stamp skip the uniqueness
     # scan on these exact frame objects (single-stamped by construction).
-    from .._utils import materialize
     cells = materialize(cells)
     cents_out._pds_ivf_stamp = stamp
     cells._pds_ivf_stamp = stamp
@@ -1411,7 +1335,6 @@ def update_vector_index(
     # r15: materialize the updated artifact (see build_vector_index) —
     # a downstream probe's stamp check + cell join would otherwise each
     # replay the batch assignment and the old-cells read.
-    from .._utils import materialize
     out_cells = materialize(cells.unionByName(
         new_cells.select(*cells.columns)))
     # both generations carry the SAME verified stamp (update requires
@@ -1438,46 +1361,15 @@ def ivf_cosine_pairs(
     recall is cluster-bounded exactly as published.
     Output: (id_a, id_b, cosine).
     """
-    if isinstance(centroids, DataFrame):
-        cents, c_id, c_vec = centroids, "centroid_id", "centroid"
-    elif centroids == "first":
-        cents, c_id, c_vec = df.where(F.col(id_col) < n_centroids), id_col, vec_col
-    else:
-        cents = ivf_centroids(df, id_col, vec_col, n_centroids,
-                              method=centroids, seed=seed)
-        c_id, c_vec = "centroid_id", "centroid"
-    import numpy as np
-    import pandas as pd
-
+    cents, c_id, c_vec = _resolve_centroids(df, id_col, vec_col, centroids,
+                                            n_centroids, seed)
     # carry_vec: (id, vec, cell) straight off the assignment batch —
     # no corpus-wide join-back-by-id (see ivf_assign)
-    tagged = (ivf_assign(df, id_col, vec_col, cents, c_id, c_vec,
-                         carry_vec=True)
-              .select(F.col(id_col).alias("__id"),
-                      F.col(vec_col).alias("__vec"), "centroid_id"))
-    if max_cell is not None:
-        # r15: the cell census and the pair mine both consume the
-        # assignment output, and Spark does not CSE the two subtrees —
-        # the salted default was paying the Θ(N·C·d) assignment GEMM
-        # TWICE (measured: semantic_dedup 7.7 s unsalted → 12.0 s when
-        # the r15 default engaged the census). Materialize the tagged
-        # frame so assignment runs once and the census is a cached-read
-        # agg — the same persisted-heavy-intermediate discipline as the
-        # minhash verify base. The returned pair plan reads it, so the
-        # caller owns it (an enclosing `_utils.owned()` block or the
-        # harness's clearCache()).
-        from .._utils import materialize
-        tagged = materialize(tagged)
-        cell_n = F.broadcast(
-            tagged.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("__cn")))
-        tagged = tagged.join(cell_n, "centroid_id").withColumn(
-            "__salt",
-            F.when(F.col("__cn") <= max_cell, F.lit(0)).otherwise(F.pmod(
-                F.xxhash64(F.col("__id")),
-                F.ceil(F.col("__cn") / max_cell).cast("long"))),
-        ).drop("__cn")
-    else:
-        tagged = tagged.withColumn("__salt", F.lit(0))
+    tagged = _salted_cells(
+        ivf_assign(df, id_col, vec_col, cents, c_id, c_vec, carry_vec=True)
+        .select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"),
+                "centroid_id"),
+        max_cell)
     id_type = df.schema[id_col].dataType.simpleString()
     schema = f"id_a {id_type}, id_b {id_type}, cosine double"
     thr = float(min_cosine)
@@ -1493,7 +1385,7 @@ def ivf_cosine_pairs(
         if m < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
         ids = pdf["__id"].to_numpy()
-        X = np.array([list(v) for v in pdf["__vec"]], dtype=np.float64)
+        X = _to_mat(pdf["__vec"])
         nrm = np.sqrt((X * X).sum(1))
         out = []
         chunk = max(1, (1 << 27) // max(1, m * 8))
@@ -1527,44 +1419,19 @@ def ivf_cell_stats(
     ``max_cell`` salting either bounded (max_group ≤ max_cell) or —
     when ``max_cell=None``, semantic_dedup's default — didn't.
 
-    Replays ivf_cosine_pairs' assignment + salting VERBATIM (kept in
-    sync by the shared params and tests; duplicated rather than
-    refactored so the mined kernel's covering code is untouched), then
+    Runs ivf_cosine_pairs' assignment and salting through the same
+    helpers (`_resolve_centroids`, `ivf_assign`, `_salted_cells`), then
     ONE group-size aggregation. Returns {n_vectors, n_cells, n_groups,
     max_group, p99_group, within_pairs}.
     """
-    if isinstance(centroids, DataFrame):
-        cents, c_id, c_vec = centroids, "centroid_id", "centroid"
-    elif centroids == "first":
-        cents, c_id, c_vec = df.where(F.col(id_col) < n_centroids), id_col, vec_col
-    else:
-        cents = ivf_centroids(df, id_col, vec_col, n_centroids,
-                              method=centroids, seed=seed)
-        c_id, c_vec = "centroid_id", "centroid"
-    tagged = (ivf_assign(df, id_col, vec_col, cents, c_id, c_vec,
-                         carry_vec=False)
+    cents, c_id, c_vec = _resolve_centroids(df, id_col, vec_col, centroids,
+                                            n_centroids, seed)
+    tagged = (ivf_assign(df, id_col, vec_col, cents, c_id, c_vec)
               .select(F.col(id_col).alias("__id"), "centroid_id"))
-    from .._utils import materialize, owned
-
     # this helper fully consumes its frames before returning, so it owns
     # them: released on exit, the error path included
     with owned():
-        if max_cell is not None:
-            # same single-assignment-pass discipline as ivf_cosine_pairs
-            # (r15): census + size agg share one materialized assignment
-            # output. This frame is skinny (id, cell) but the assignment
-            # feeding it is the same GEMM.
-            tagged = materialize(tagged)
-            cell_n = F.broadcast(tagged.groupBy("centroid_id").agg(
-                F.count(F.lit(1)).alias("__cn")))
-            tagged = tagged.join(cell_n, "centroid_id").withColumn(
-                "__salt",
-                F.when(F.col("__cn") <= max_cell, F.lit(0)).otherwise(F.pmod(
-                    F.xxhash64(F.col("__id")),
-                    F.ceil(F.col("__cn") / max_cell).cast("long"))),
-            ).drop("__cn")
-        else:
-            tagged = tagged.withColumn("__salt", F.lit(0))
+        tagged = _salted_cells(tagged, max_cell)
         sizes = (tagged.groupBy("centroid_id", "__salt")
                  .agg(F.count(F.lit(1)).alias("g")))
         row = sizes.agg(

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ._utils import _run_threads
 from .functions import linear as L
 from .queries import _r, query
 from .sources import load_table
@@ -250,11 +251,8 @@ def onlinelr_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             m.partial_fit(b)
         return m
 
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        f_fwd = ex.submit(_fold, batches)
-        f_rev = ex.submit(_fold, list(reversed(batches)))
-        fwd, rev = f_fwd.result(), f_rev.result()
+    fwd, rev = _run_threads([lambda: _fold(batches),
+                             lambda: _fold(list(reversed(batches)))])
     c4 = [round(float(v), 4) for v in fwd.coef_]
     order_inv = c4 == [round(float(v), 4) for v in rev.coef_]
     return spark.createDataFrame(

@@ -57,6 +57,13 @@ def main() -> int:
     import __spark_entry__ as e
     from pyspark.sql import SparkSession
 
+    qs, oracles = e.queries(), e.oracle_sql()
+    unknown = sorted(ONLY - set(qs))
+    if unknown:
+        print(f"unknown query name(s): {', '.join(unknown)}")
+        return 2
+    run = [n for n in qs if not ONLY or n in ONLY]
+
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
@@ -70,13 +77,10 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs, oracles = e.queries(), e.oracle_sql()
     failures = []
-    for name, fn in qs.items():
-        if ONLY and name not in ONLY:
-            continue
+    for name in run:
         try:
-            spark_pdf = fn(spark, SF_DIR).toPandas()
+            spark_pdf = qs[name](spark, SF_DIR).toPandas()
         except Exception as ex:
             failures.append(name)
             print(f"FAIL {name}: spark error {str(ex)[:300]}")
@@ -100,7 +104,7 @@ def main() -> int:
         else:
             failures.append(name)
             print(f"FAIL {name}: {why}")
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} pass")
+    print(f"\n{len(run) - len(failures)}/{len(run)} pass")
     spark.stop()
     return 1 if failures else 0
 

@@ -1692,3 +1692,35 @@ def test_srp_bucket_stats(spark):
                              max_bucket=1)
     assert st2["dropped_buckets"] == st2["n_buckets"]
     assert st2["pair_slots"] == 0
+
+
+def test_ivf_knn_join_salted_assigns_once(spark):
+    """With max_cell set, the cell census and the per-cell search share
+    ONE assignment pass: the Python assignment node of the executed
+    plan emits each input vector once, not once per consumer."""
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    n = 120
+    df = spark.createDataFrame(pd.DataFrame(_vec_rows(n)))
+    sql = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty(30000)
+    seen = {e.executionId() for e in seq(sql.executionsList())}
+    out = K.ivf_knn_join(df, "vid", "v", n_centroids=4, k=3, max_cell=50)
+    assert out.count() > 0
+    bus.waitUntilEmpty(30000)
+    rows = {}  # accumulator id -> rows: a node may appear more than once
+    for e in seq(sql.executionsList()):
+        eid = e.executionId()
+        if eid in seen:
+            continue
+        values = sql.executionMetrics(eid)
+        for node in seq(sql.planGraph(eid).allNodes()):
+            if node.name() != "MapInPandas":
+                continue
+            for m in seq(node.metrics()):
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    rows[m.accumulatorId()] = int(v.get().replace(",", ""))
+    assert sum(rows.values()) == n

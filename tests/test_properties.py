@@ -253,3 +253,68 @@ def test_ivf_percell_topk_then_merge_equals_global(n, q, k, cells,
         ref_sc, ref_id = _topk_rows(score[qi:qi + 1, m_all], ids[m_all], kk)
         assert np.array_equal(got_sc, ref_sc[0])
         assert np.array_equal(got_id, ref_id[0])
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.integers(min_value=1, max_value=30),   # rows
+       st.integers(min_value=1, max_value=12),   # centroids
+       st.integers(min_value=1, max_value=6),    # dim
+       st.sampled_from([1, 2, 3]),               # n nearest
+       st.booleans(),                            # integer-valued (ties)
+       st.integers(min_value=0, max_value=10_000))
+def test_nearest_centroid_kernel_matches_lexsort(rows, k, dim, n, ints,
+                                                 seed):
+    """The one nearest-centroid kernel (k-means, IVF assign/probe, PQ
+    train/encode) must pick exactly a plain (d², centroid row) lexsort's
+    first n — ties to the LOWEST row. Integer-valued inputs make exact
+    d² ties the common case; X is a column slice of a wider matrix
+    (non-contiguous, like a PQ subspace), and a tiny row slab forces
+    several slabs per call."""
+    from polars_ds_extension_spark.operators.cluster import _nearest_np
+
+    rng = np.random.default_rng(seed)
+    if ints:
+        W = rng.integers(-2, 3, size=(rows, 2 * dim)).astype(np.float64)
+        C = rng.integers(-2, 3, size=(k, dim)).astype(np.float64)
+    else:
+        W, C = rng.normal(size=(rows, 2 * dim)), rng.normal(size=(k, dim))
+    X = W[:, dim:]
+    d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+    ref = np.lexsort((np.broadcast_to(np.arange(k), d.shape), d),
+                     axis=1)[:, :min(n, k)]
+    for slab in (1 << 23, 16 * k):
+        got, d2 = _nearest_np(X, C, n, slab_bytes=slab)
+        assert np.array_equal(got, ref)
+        assert np.array_equal(d2, np.take_along_axis(d, ref, axis=1))
+
+
+def test_ivf_assign_is_the_one_probe_case(spark):
+    """ivf_assign == ivf_assign_probe(nprobe=1) minus the probe column,
+    on string and non-0-based centroid ids, with exact ties (a
+    duplicated centroid, integer-valued vectors) resolved to the lowest
+    id — the ORDER BY (d², id) contract."""
+    from polars_ds_extension_spark.operators import knn as K
+
+    rng = np.random.default_rng(5)
+    vecs = [[float(x) for x in rng.integers(-1, 2, size=3)]
+            for _ in range(60)]
+    df = spark.createDataFrame(list(enumerate(vecs)),
+                               "vid bigint, v array<double>")
+    cvecs = [[float(x) for x in rng.integers(-1, 2, size=3)]
+             for _ in range(5)]
+    cvecs[3] = cvecs[1]
+    for ids, typ in ((["c4", "c0", "c3", "c1", "c2"], "string"),
+                     ([107, 103, 105, 101, 109], "bigint")):
+        cents = spark.createDataFrame(list(zip(ids, cvecs)),
+                                      f"cid {typ}, c array<double>")
+        one = K.ivf_assign(df, "vid", "v", cents, "cid", "c")
+        probe = K.ivf_assign_probe(df, "vid", "v", cents, "cid", "c",
+                                   nprobe=1)
+        assert one.columns == ["vid", "centroid_id"]
+        assert one.schema["centroid_id"].dataType.simpleString() == typ
+        got = dict(one.collect())
+        assert got == {r[0]: r[1] for r in probe.collect()}
+        assert set(probe.select("probe").distinct().collect()) == {(1,)}
+        for vid, x in enumerate(vecs):
+            d2 = [sum((a - b) ** 2 for a, b in zip(x, c)) for c in cvecs]
+            assert got[vid] == min(zip(d2, ids))[1]

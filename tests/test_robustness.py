@@ -542,3 +542,31 @@ def test_overlap_minhash_bases_releases_on_failure(spark):
                                   (bad, "doc_id", "text"),
                                   (_docs(spark, 20), "doc_id", "text")])
     assert not (_persistent_ids(spark) - before)
+
+
+def test_run_threads_jobs_keep_caller_job_tags(spark):
+    """A job launched on a helper thread is charged to its caller: it
+    carries the caller's ``spark.job.tags`` local property. Results come
+    back in order, and the first error re-raises after all thunks ran."""
+    import uuid
+
+    from polars_ds_extension_spark._utils import _run_threads
+
+    def fail():
+        raise ValueError("first")
+
+    sc = spark.sparkContext
+    tag = f"pds-thread-{uuid.uuid4().hex[:8]}"
+    ran = []
+    sc.addJobTag(tag)
+    try:
+        out = _run_threads([lambda: spark.range(7).count(),
+                            lambda: sc.getLocalProperty("spark.job.tags")])
+        with pytest.raises(ValueError, match="first"):
+            _run_threads([fail, lambda: ran.append(1)])
+    finally:
+        sc.removeJobTag(tag)
+    assert out[0] == 7 and tag in out[1].split(",")
+    assert ran == [1]
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    assert len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag)) >= 1
