@@ -78,5 +78,21 @@ def get_spark(app: str = "polars_ds_extension_spark",
         .config("spark.driver.extraJavaOptions",
                 os.environ.get("SPARK_GRAFT_JAVA_OPTS", "-XX:+UseParallelGC"))
         .config("spark.ui.enabled", "false")
+        # DataFrame call-site capture off. With it on, every wrapped
+        # pyspark.sql.functions call and Column method makes ~5 py4j
+        # round trips (active session, JVM class lookup, conf read,
+        # PySparkCurrentOrigin.set/.clear) and walks the Python stack;
+        # PySpark documents the flag as existing "to reduce performance
+        # slowdown". Counted over warm perfbench expr_udf passes (sf0.1,
+        # 4 cores, memoized table schemas): query construction makes
+        # 4,331–4,481 round trips per pass with it on, 1,800–1,937 off
+        # (regression_metrics 951 → 261, ttest 475 → 145). Cost: a
+        # runtime expression error's DataFrame query context loses its
+        # `"x" was called from file:line` fragment; the exception class
+        # and message are unchanged. To get the fragment back, build the
+        # session with this conf "true" before the process's first
+        # Column call: PySpark reads the flag once per process and
+        # caches it (pyspark.errors.utils.is_debugging_enabled).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )

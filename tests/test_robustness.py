@@ -570,3 +570,125 @@ def test_run_threads_jobs_keep_caller_job_tags(spark):
     assert ran == [1]
     sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
     assert len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag)) >= 1
+
+
+# ------------------------------------------------- memoized table schemas
+
+def _jobs_in_group(spark, fn) -> int:
+    """Number of Spark jobs `fn()` launches, read under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pds-memo-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "jobs_in_group")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_load_table_launches_no_job(spark, sf_dir):
+    from polars_ds_extension_spark.sources import load_table
+
+    load_table(spark, sf_dir, "lineitem")
+    assert _jobs_in_group(
+        spark, lambda: load_table(spark, sf_dir, "lineitem")) == 0
+
+
+def test_load_table_schema_equals_inferring_read(spark, sf_dir):
+    """The memoized schema is Spark's own inference, events.ts
+    normalization included, on the first (miss) and second (hit) read."""
+    import os
+
+    from pyspark.sql.types import LongType
+
+    from polars_ds_extension_spark.sources import TABLES, load_table
+
+    for name in TABLES:
+        ref = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        if name == "events" and isinstance(ref.schema["ts"].dataType,
+                                           LongType):
+            ref = ref.withColumn(
+                "ts", F.timestamp_micros(F.expr("ts div 1000")))
+        for _ in range(2):
+            assert load_table(spark, sf_dir, name).schema == ref.schema, name
+
+
+def _write_one_file(path, table, mtime: float) -> None:
+    import os
+
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, str(path))
+    os.utime(path, (mtime, mtime))
+
+
+def test_rewritten_parquet_file_is_inferred_again(spark, tmp_path):
+    """A same-size rewrite: only the modification time tells it apart."""
+    import os
+
+    import pyarrow as pa
+
+    from polars_ds_extension_spark.sources import load_table
+
+    path = tmp_path / "t.parquet"
+    _write_one_file(path, pa.table({"a": [1, 2, 3]}), 1_600_000_000)
+    size = os.path.getsize(path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    _write_one_file(path, pa.table({"b": [4, 5, 6]}), 1_600_000_100)
+    assert os.path.getsize(path) == size
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["b"]
+    assert sorted(r.b for r in df.collect()) == [4, 5, 6]
+
+
+def test_overwritten_parquet_directory_is_inferred_again(spark, tmp_path):
+    import os
+
+    from polars_ds_extension_spark.sources import load_table
+
+    path = str(tmp_path / "d.parquet")
+    spark.range(4).select(F.col("id").alias("a")) \
+        .write.mode("overwrite").parquet(path)
+    os.utime(path, (1_600_000_000, 1_600_000_000))
+    assert load_table(spark, str(tmp_path), "d").columns == ["a"]
+    spark.range(3).select(F.col("id").cast("string").alias("b"),
+                          (F.col("id") * 2).alias("c")) \
+        .write.mode("overwrite").parquet(path)
+    os.utime(path, (1_600_000_100, 1_600_000_100))
+    df = load_table(spark, str(tmp_path), "d")
+    assert df.columns == ["b", "c"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("0", 0), ("1", 2), ("2", 4)]
+
+
+def test_load_table_missing_path_raises_path_not_found(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    from polars_ds_extension_spark.sources import load_table
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        load_table(spark, str(tmp_path), "absent")
+
+
+# ------------------------------------------------------ session settings
+
+def test_session_turns_dataframe_call_site_capture_off(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+
+
+def test_runtime_expression_error_keeps_its_exception_class(spark):
+    """Call-site capture only adds a fragment to the query context; the
+    error raised for a failing runtime expression stays the same."""
+    from pyspark.errors import NumberFormatException
+
+    bad = F.concat(F.lit("x"), F.col("id").cast("string")).cast("int")
+    with pytest.raises(NumberFormatException, match="CAST_INVALID_INPUT"):
+        spark.range(3).select(bad.alias("v")).collect()
